@@ -772,7 +772,7 @@ def connected_components(
     propagation result as parents: its round-start table is the
     identity labeling, so a stale shortcut there is a semantic no-op
     and diameter-2 graphs pay one extra full round (measured: pure
-    stale = 0.83x on dedup_survivors; a mid-round lazy localCheckpoint
+    stale = 0.83x on dedup_survivors; a mid-round lazy lineage cut
     of prop = 0.90-0.94x on both pair queries because it serializes
     two join subtrees that otherwise run in parallel). Stale parents
     keep O(log diameter): reach per round is 2r+1 vs fresh 2r+2.
@@ -796,20 +796,20 @@ def connected_components(
     still COUNTED individually against max_iter and reported via
     ``last_rounds``.
     """
-    # localCheckpoint the edge list: it is consumed EVERY round (plus
+    # cut the edge list's lineage: it is consumed EVERY round (plus
     # the label init), and its lineage is the caller's whole
     # candidate-pair pipeline (an LSH/Jaccard self-join) — without the
     # cut that pipeline re-executes once per round per consumer.
-    edges = (
+    edges = lineage_cut(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
+        .distinct(),
         # eager: a LAZY cut here was A/B'd (r15) and read 0.95x on
         # minhash_survivors / 1.05x on dedup_survivors — with a lazy
         # cut the first probe job's THREE edge consumers can race-
         # recompute the caller's whole pair pipeline before the
         # checkpoint lands; eager pays one job but materializes once.
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -856,7 +856,12 @@ def connected_components(
             # dedup_survivors); later rounds shortcut against the
             # ROUND-START checkpointed table, which plans as a cheap
             # RDD scan instead of duplicating the propagation subtree
-            # on the second join side (see docstring).
+            # on the second join side (see docstring). That holds for
+            # unroll == 1 only: inside an unrolled block, rounds >= 2
+            # shortcut against the previous IN-BLOCK result, which is
+            # not checkpointed, so its whole subtree is planned again
+            # on the second join side (a plan-size cost, not a result
+            # change: labels are identical for any unroll).
             p_src = prop if rounds == 1 else prev
             parents = p_src.select(
                 F.col("node").alias("p_node"), F.col("label").alias("p_label")
@@ -878,7 +883,7 @@ def connected_components(
         # INSIDE the convergence-probe job below — one Spark job per
         # round instead of two (r14: the e2e_v2 profile showed the
         # per-job constant, not the shuffles, is the fixture wall)
-        new_labels = new_labels.localCheckpoint(eager=False)
+        new_labels = lineage_cut(new_labels)
         new_sum = new_labels.agg(F.sum("label")).first()[0]
         labels = new_labels
         if new_sum == prev_sum:
@@ -1267,14 +1272,14 @@ def semantic_dedup(
     """
     from bo_sql_spark.operators.similarity import ivf_assign
 
-    # localCheckpoint: `assigned` feeds THREE consumers (both sides of
+    # lineage cut: `assigned` feeds THREE consumers (both sides of
     # the pairwise self-join + the final anti-join), and the broadcast-
     # centroid argmin lives in the scan stage with no exchange for
     # Spark to reuse — without the cut it is genuinely computed 3x
     # (the O(n*k) term that dominates at production centroid counts).
-    assigned = ivf_assign(
-        emb, centroids, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    assigned = lineage_cut(
+        ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col), eager=True
+    )
     dups = _pairwise_dup_ids(
         _with_norms(assigned, id_col, vec_col), threshold, id_col, vec_col
     )
@@ -1372,9 +1377,10 @@ def semantic_dedup_incremental(
         # checkpoint for the same reason as semantic_dedup: the batch
         # assignment feeds the corpus cross-check, both sides of the
         # internal pairwise self-join, AND the final anti-join
-        else ivf_assign(
-            batch, centroids, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint(eager=True)
+        else lineage_cut(
+            ivf_assign(batch, centroids, id_col=id_col, vec_col=vec_col),
+            eager=True,
+        )
     )
     bn = _with_norms(b, id_col, vec_col)
     internal = _pairwise_dup_ids(bn, threshold, id_col, vec_col)
@@ -1524,9 +1530,10 @@ def semantic_dedup_stream_ingest(
     # read is the whole unscoped dir, so the survivors MUST be computed
     # and materialized before the store append — keep the r14 ordering.
     with no_spread():
-        b_assigned = ivf_assign(
-            batch, centroids, id_col=id_col, vec_col=vec_col
-        ).localCheckpoint(eager=True)
+        b_assigned = lineage_cut(
+            ivf_assign(batch, centroids, id_col=id_col, vec_col=vec_col),
+            eager=True,
+        )
         if prior_dirs:
             surv = semantic_dedup_incremental(
                 _read_prior(),
@@ -1539,7 +1546,7 @@ def semantic_dedup_stream_ingest(
             )
         else:
             surv = semantic_dedup(batch, centroids, threshold, id_col, vec_col)
-    surv = surv.localCheckpoint(eager=True)
+    surv = lineage_cut(surv, eager=True)
     surv.write.mode("append").parquet(survivors_path)
     b_assigned.write.mode("append").partitionBy("cell").parquet(store_path)
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from bo_sql_spark.parallel import lineage_cut
+
 
 def two_sample_chisq(
     df: DataFrame, category_col: str, in_b: Column
@@ -458,7 +460,7 @@ def robust_outliers_from_counts(counts: DataFrame) -> DataFrame:
     # the value-grain aggregation run ONCE, not once per consumer
     # (the graph/SemDeDup lineage-cut discipline). Both tables are
     # value-cardinality-sized, tiny next to the data.
-    counts = counts.localCheckpoint(eager=False)
+    counts = lineage_cut(counts)
     totals = counts.groupBy("grp").agg(F.sum("_c").cast("long").alias("n"))
     w = (
         Window.partitionBy("grp")
@@ -473,12 +475,11 @@ def robust_outliers_from_counts(counts: DataFrame) -> DataFrame:
         .groupBy("grp")
         .agg(F.min("_x").alias("med"))
     )
-    devs = (
+    devs = lineage_cut(
         counts.join(F.broadcast(med), "grp")
         .select("grp", F.abs(F.col("_x") - F.col("med")).alias("_d"), "_c")
         .groupBy("grp", "_d")
         .agg(F.sum("_c").cast("long").alias("_c"))
-        .localCheckpoint(eager=False)
     )
     wd = (
         Window.partitionBy("grp")
@@ -650,7 +651,6 @@ def embedding_centroid_drift(
     ).select("grp", F.posexplode_outer("qv").alias("d", "x")).filter(
         F.col("d").isNull() | (F.col("d") < dims)
     )
-    from bo_sql_spark.parallel import lineage_cut
 
     # r15-opt (§5 one-consumer rule): sums is a (groups x dims)-row
     # mergeable summary consumed by the global fold AND the per-group

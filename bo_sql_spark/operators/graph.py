@@ -31,6 +31,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bo_sql_spark.parallel import lineage_cut
+
 
 def pagerank(
     edges: DataFrame,
@@ -78,18 +80,18 @@ def pagerank(
     # lineage (e.g. the knn self-join) replays once per consumer
     # (measured 5.7s -> 1.5s on the knn query; the dup-set lesson from
     # round 7 applies to graphs verbatim)
-    e0 = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).localCheckpoint(eager=True)
+    e0 = lineage_cut(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")), eager=True
+    )
     # fold the out-degree INTO the checkpointed edge table: computed
     # once, it rides along instead of re-joining every iteration
     outdeg = e0.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    e = e0.join(outdeg, "_s").localCheckpoint(eager=True)
-    nodes = (
+    e = lineage_cut(e0.join(outdeg, "_s"), eager=True)
+    nodes = lineage_cut(
         e0.select(F.col("_s").alias("node"))
         .union(e0.select(F.col("_d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     n = nodes.count()
     if n == 0:
@@ -104,18 +106,15 @@ def pagerank(
         # in the teleport denominator would silently shrink every
         # present seed's share (and diverge from any replay that
         # counts in-graph seeds)
-        sd = (
-            seeds.select(F.col("node"))
-            .distinct()
-            .join(nodes, "node", "left_semi")
-            .localCheckpoint(eager=True)
+        sd = lineage_cut(
+            seeds.select(F.col("node")).distinct().join(nodes, "node", "left_semi"),
+            eager=True,
         )
         n_seed = sd.count()
         if n_seed == 0:
             raise ValueError("no seed appears in the edge table")
-        nodes_b = nodes.join(
-            F.broadcast(sd.withColumn("_is_seed", F.lit(1))), "node", "left"
-        ).localCheckpoint(eager=True)
+        seed_flag = F.broadcast(sd.withColumn("_is_seed", F.lit(1)))
+        nodes_b = lineage_cut(nodes.join(seed_flag, "node", "left"), eager=True)
         seed_amt = (1000 - d) * 1_000_000 // (1000 * n_seed)
         base_col = (
             F.when(F.col("_is_seed") == 1, F.lit(seed_amt))
@@ -152,7 +151,7 @@ def pagerank(
         )
         iters_run = i + 1
         if tol_micros is not None:
-            scores = scores.localCheckpoint(eager=True)
+            scores = lineage_cut(scores, eager=True)
             row = (
                 scores.join(
                     prev.select("node", F.col("score").alias("_prev")),
@@ -172,7 +171,7 @@ def pagerank(
             if row["_delta"] is not None and row["_delta"] <= int(tol_micros):
                 break
         elif checkpoint_every and (i + 1) % int(checkpoint_every) == 0:
-            scores = scores.localCheckpoint(eager=True)
+            scores = lineage_cut(scores, eager=True)
     # the actual iteration count rides along as a literal column (a
     # Python attribute on the DataFrame would vanish on the next
     # transformation); callers that don't want it select (node, score)
@@ -206,14 +205,14 @@ def label_propagate(
     groupBy + one per-node argmax per iteration; the argmax is a
     max_by over (cnt, -label)-style ordering, not a window, so the
     shuffle stays (node, label)-keyed counts."""
-    e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_d")
-    ).localCheckpoint(eager=True)
-    nodes = (
+    e = lineage_cut(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")), eager=True
+    )
+    nodes = lineage_cut(
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     sd = F.broadcast(
         seeds.select(
@@ -510,10 +509,13 @@ def kcore_peel_trace(
     iteration message-passing shape as pagerank; at 100 TB the peel
     runs O(degeneracy) rounds, each a linear pass.
     """
-    e0 = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("u"),
-        F.greatest(F.col(src), F.col(dst)).alias("v"),
-    ).filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=True)
+    e0 = lineage_cut(
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("u"),
+            F.greatest(F.col(src), F.col(dst)).alias("v"),
+        ).filter(F.col("u") != F.col("v")).distinct(),
+        eager=True,
+    )
     spark = edges.sparkSession
     cur = e0
     n_nodes = (
@@ -530,11 +532,12 @@ def kcore_peel_trace(
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("_d"))
         )
-        keep = deg.filter(F.col("_d") >= k).select("n").localCheckpoint(eager=True)
-        cur = (
-            cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
+        keep = lineage_cut(deg.filter(F.col("_d") >= k).select("n"), eager=True)
+        cur = lineage_cut(
+            cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi").join(
+                keep.withColumnRenamed("n", "v"), "v", "left_semi"
+            ),
+            eager=True,
         )
         rows.append((r, keep.count(), cur.count()))
     return spark.createDataFrame(

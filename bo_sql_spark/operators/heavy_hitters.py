@@ -36,6 +36,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bo_sql_spark.parallel import lineage_cut
+
 
 def misra_gries_candidates(
     df: DataFrame, key_col: str, m: int, emit_total: bool = False
@@ -113,8 +115,6 @@ def heavy_hitters(
             f"need m ({m}) > ratio_denom ({ratio_denom}) for the MG "
             "superset guarantee"
         )
-    from bo_sql_spark.parallel import lineage_cut
-
     df = df.filter(F.col(key_col).isNotNull())
     # r15-opt: one MG pass yields candidates AND per-partition totals
     # (NULL-key rows) — two corpus scans, not three. The summary table
@@ -471,15 +471,14 @@ def sampled_quantiles(
     # r14-opt: cut the sample's lineage — the one-row stats aggregate
     # and the shard/rank plan both consume it; the cut makes the full
     # md5 scan run ONCE per build (the one-consumer rule; guide §5
-    # localCheckpoint). spread_scan was tried on the scan and LOST in
+    # lineage cut). spread_scan was tried on the scan and LOST in
     # every instrument (bench pairs 1.44x/1.77x): one md5 per row is
     # below the exchange's cost — the "cheap map" exclusion.
-    samp = (
+    samp = lineage_cut(
         df.select(*dict.fromkeys((key_col, value_col)))
         .filter(F.col(value_col).isNotNull())
         .filter(F.pmod(h, F.lit(int(d))) == 0)
         .select(F.col(value_col).cast("double").alias("_x"))
-        .localCheckpoint(eager=False)
     )
     stats = samp.agg(
         F.count(F.lit(1)).cast("long").alias("_n"),

@@ -128,8 +128,6 @@ def bm25_topk(
     """
     if not terms:
         raise ValueError("bm25_topk needs at least one term")
-    from bo_sql_spark.parallel import lineage_cut
-
     # r15-opt (§2.3 aggregate-before-shuffle / §2.4 remove shuffles):
     # the dl, tf and df branches each re-planned the tokenize pass —
     # the r15 scan audit read 4 parquet scans of documents in
@@ -141,9 +139,11 @@ def bm25_topk(
     # stats fold over it, and dl rides along so the old corpus-wide
     # tf-dl join disappears. Same integers everywhere (count/sum
     # reorderings of exact longs), so scores and the top-k cut are
-    # unchanged — oracle untouched. The doc-grain table is cut
-    # (one-consumer rule: 3 consumers), a per-doc row of 1 + |terms|
-    # longs, the guide §8 "lightweight proxy" shape.
+    # unchanged — oracle untouched. The doc-grain table (a per-doc
+    # row of 1 + |terms| longs) is deliberately NOT cut although it
+    # has 3 consumers: a lineage cut on it was measured at 0.76x (the
+    # ExistingRDD leaf breaks codegen/AQE) and dropped, so each
+    # consumer plans its own copy of the tokenize+aggregate pass.
     tl = list(dict.fromkeys(terms))
     toks = doc_terms(docs, id_col, text_col)
     per_doc = toks.groupBy(id_col).agg(

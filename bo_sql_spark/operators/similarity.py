@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from bo_sql_spark.functions import cosine_similarity
+from bo_sql_spark.parallel import lineage_cut
 
 
 def cosine_topk(
@@ -553,7 +554,7 @@ def approx_similarity_join_portable(
     # bucket with (same predicate in _portable_rp_join_sql's oracle).
     # r14-opt: quantize + Arrow bucket matmul is the expensive map;
     # spread single-split inputs across cores (guide §2.5; no-op at scale)
-    from bo_sql_spark.parallel import lineage_cut, spread_scan
+    from bo_sql_spark.parallel import spread_scan
 
     q = spread_scan(emb, id_col).select(
         F.col(id_col), quantize_vec(vec_col).alias("qv")
@@ -2480,9 +2481,9 @@ def knn_graph(
 
     from bo_sql_spark.functions import dot, l2_norm
 
-    assigned = ivf_assign(
-        emb, centroids, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    assigned = lineage_cut(
+        ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col), eager=True
+    )
     if impl == "arrow":
         from bo_sql_spark.operators.dedup import _float_pair_cos_udf
 

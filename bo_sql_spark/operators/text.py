@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from bo_sql_spark.functions import normalize_text, tokens
+from bo_sql_spark.parallel import lineage_cut
 
 # Tiny per-language marker-word lists (public common-word sets).
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -119,7 +120,7 @@ def doc_term_freq(
     corpus tokenization every downstream per-doc information measure
     folds over. token_entropy and cross_entropy_lm both start here;
     callers that need several measures over the same corpus compute
-    this once (localCheckpoint it for multi-consumer plans — the
+    this once (lineage_cut it for multi-consumer plans — the
     one-consumer rule at DOC grain: two folds re-deriving this table
     is two full corpus tokenizations at 100 TB)."""
     from bo_sql_spark.parallel import spread_scan
@@ -279,6 +280,25 @@ def lm_smoothed_model(tf: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     total = with_ln_micros(tot, "n_corpus + n_vocab", "_lnNV")
     return terms, total
+
+
+def lm_fit(tf: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Fit the servable LM on a model corpus's (doc_id, term, c) table:
+    lm_smoothed_model plus that corpus's mean cross-entropy under the
+    model — the frozen relative threshold the LM filter decides
+    against. Returns ``(terms, total, mean)``, ``mean`` one row
+    (mean_ce). terms and total are lineage-cut (each feeds the mean
+    fold and the caller's serve or store write); callers that reuse
+    ``tf`` cut it themselves."""
+    terms, total = lm_smoothed_model(tf)
+    terms = lineage_cut(terms)
+    total = lineage_cut(total)
+    mean = cross_entropy_served(tf, terms, total).agg(
+        F.expr("CAST(SUM(cross_entropy_micros) DIV COUNT(*) AS BIGINT)").alias(
+            "mean_ce"
+        )
+    )
+    return terms, total, mean
 
 
 def cross_entropy_served(
@@ -555,26 +575,23 @@ def _bpe_train_loop(
     (cnt desc, a, b). Returns (final word state, per-step merge rows).
 
     Every iteration runs over the vocab-sized word-frequency table
-    (see bpe_init_words); state is localCheckpoint'ed per step so the
+    (see bpe_init_words); state is lineage-cut per step so the
     lazy plan stays linear in n_merges (the argmax feeds both the
     output and the next state — without the cut the plan would double
     per step, same lineage issue as connected_components). Living in
     one place keeps the tie rule and checkpoint strategy identical
     between the merge table bpe_train ships and the state
     bpe_token_counts segments with."""
-    state = bpe_init_words(docs, text_col).localCheckpoint(eager=False)
+    state = lineage_cut(bpe_init_words(docs, text_col))
     merges = []
     for step in range(1, n_merges + 1):
-        top = (
-            bpe_pair_counts(state)
-            .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(1)
-            .localCheckpoint(eager=False)
+        top = lineage_cut(
+            bpe_pair_counts(state).orderBy(F.col("cnt").desc(), "a", "b").limit(1)
         )
         merges.append(
             top.select(F.lit(step).cast("long").alias("step"), "a", "b", "cnt")
         )
-        state = bpe_apply_merge(state, top).localCheckpoint(eager=False)
+        state = lineage_cut(bpe_apply_merge(state, top))
     return state, merges
 
 

@@ -1,25 +1,36 @@
-"""Scale-adaptive minimum map parallelism for CPU-heavy per-row stages.
+"""The package's materialization and parallelism policy. This is the
+only module that calls ``localCheckpoint``: every operator and query
+cuts lineage through ``lineage_cut`` and spreads scans through
+``spread_scan``.
 
-The round-14-opt measurement found every fixture table is ONE parquet
-file with ONE row group, so every scan-side map stage — the md5/shingle
-explodes feeding MinHash/SimHash/KMV, the winnowing HOF chain, the
-Arrow matmul stages, the 64-wide decimal sums — ran as a SINGLE task on
-``local[32]``: the "input skew: one huge unsplittable file" case of the
-optimization guide (§2.5, "repartition immediately after the read").
+Lineage cuts. Spark re-executes a subtree once per consumer (the
+"one-consumer rule"; the round-14 minhash plan showed 16 parquet scans
+for one query). A cut replaces the subtree with a checkpointed RDD
+scan, so it runs once. Two kinds, mirroring ``localCheckpoint(eager)``:
 
-``spread_scan`` fixes that without hurting the 100 TB shape: it adds a
-hash-repartition ONLY when the input's planned partition count is below
-the session's default parallelism. At production scale a corpus scan
-already has >= cores splits and the function is an exact no-op (no
-exchange in the plan); on the single-file fixture it costs one tiny
-shuffle (the whole file is < one split by construction of the branch)
-and buys every core for the expensive map that follows.
+- A lazy cut (``lineage_cut(df)``) materializes inside the first job
+  that consumes it and adds no action. It only saves recomputation, so
+  ``BOSQL_CKPT_DISABLE=1`` (the cut-on/cut-off A/B switch) turns every
+  lazy cut into the identity without changing any result. Iterative
+  builders (BPE merges, connected-components rounds) then keep their
+  whole lineage, so their plans grow per iteration.
+- An eager cut (``lineage_cut(df, eager=True)``) runs one job now and
+  ignores the switch, because it does more than save recomputation: it
+  orders side effects (survivors computed from a store are pinned
+  BEFORE the same store is appended to), it fires the job a driver
+  loop waits on (a per-round count or convergence probe), or it pins a
+  table before several consumers race to recompute it (the measured
+  connected-components edge list).
 
-Deliberately NOT applied to cheap scan->aggregate paths (core tier):
-there the map is parquet decode + a codegen aggregate, the decode
-cannot be parallelized below one row group anyway, and the added
-exchange is pure cost. Apply it where per-row CPU (hashing, HOF/Arrow
-evaluation, wide decimal aggregation) dominates the stage.
+Scan spreading. Every fixture table is ONE parquet file with ONE row
+group, so a CPU-heavy map right after the scan (md5/shingle explodes,
+HOF chains, Arrow matmuls, wide decimal sums) would run as ONE task:
+the optimization guide's "one huge unsplittable file" case (§2.5).
+``spread_scan`` hash-repartitions only when the planned partition
+count is below the default parallelism, so at production scale it is
+an exact no-op. It is not applied to cheap scan->aggregate paths,
+where the exchange is pure cost. ``BOSQL_SPREAD_DISABLE=1`` and the
+``no_spread()`` scope turn it off.
 """
 
 from __future__ import annotations
@@ -74,15 +85,15 @@ def spread_scan(df: DataFrame, *key_cols: str, target: int | None = None) -> Dat
     return df.repartition(target, *key_cols) if key_cols else df.repartition(target)
 
 
-def lineage_cut(df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint(eager=False)`` behind a measurement kill
-    switch (BOSQL_CKPT_DISABLE=1 returns ``df`` unchanged) — the
-    multi-consumer lineage cut the operators apply when one expensive
-    subtree feeds several joins/aggregates (the "one-consumer rule":
-    without the cut Spark re-executes the subtree once per consumer;
-    the round-14 minhash plan showed 16 parquet scans for one query).
-    Lazy: the checkpoint RDD materializes inside the first consuming
-    job, adding no extra action."""
-    if os.environ.get("BOSQL_CKPT_DISABLE") == "1":
+def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``: the package's one lineage cut (see
+    the module docstring for the policy).
+
+    Lazy (default): the checkpoint RDD materializes inside the first
+    consuming job; ``BOSQL_CKPT_DISABLE=1`` returns ``df`` unchanged.
+    Eager: materializes now and always runs, switch or not — eager
+    cuts order side effects (data pinned before a later write touches
+    its source) and fire the job a driver loop waits on."""
+    if not eager and os.environ.get("BOSQL_CKPT_DISABLE") == "1":
         return df
-    return df.localCheckpoint(eager=False)
+    return df.localCheckpoint(eager=eager)

@@ -29,11 +29,30 @@ from bo_sql_spark.operators import multimodal as M
 from bo_sql_spark.operators import similarity as S
 from bo_sql_spark.operators import text as T
 from bo_sql_spark.operators.asof import asof_join
+from bo_sql_spark.parallel import lineage_cut
 from bo_sql_spark.queries import register
 
 
 def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return load_tables(spark, sf_dir)
+
+
+def _cents16(emb: DataFrame) -> DataFrame:
+    """The 16 lowest-id embeddings as (c_id, c_vec double[]) centroids:
+    the fixed IVF cells the kNN graph family buckets by."""
+    return emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").cast("array<double>").alias("c_vec"),
+    )
+
+
+def _knn16_edges(emb: DataFrame) -> DataFrame:
+    """The graph family's shared input: the k=5 IVF-bucketed kNN graph
+    over the 16 fixed cells as a directed (src, dst) edge table. Left
+    uncut; each query cuts it as its operator's consumers need."""
+    return S.knn_graph(emb, _cents16(emb), k=5).select(
+        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
+    )
 
 
 def _portable_minhash_pairs_sql(
@@ -3377,13 +3396,7 @@ def graph_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import pagerank
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    )
+    edges = _knn16_edges(emb)
     return (
         pagerank(edges, n_iter=3)
         .select(F.col("node").alias("vec_id"), "score")
@@ -3474,13 +3487,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import label_propagate
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    )
+    edges = _knn16_edges(emb)
     seeds = emb.filter(F.col("vec_id") < 30).select(
         F.col("vec_id").alias("node"),
         (F.col("vec_id") % 3).cast("long").alias("label"),
@@ -3802,14 +3809,16 @@ def drift_topk_churn_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = _t(spark, sf_dir)["events"]
-    counts = ev.groupBy("user_id").agg(
-        F.sum(F.when(~F.dayofweek("ts").isin(1, 7), 1).otherwise(0))
-        .cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.dayofweek("ts").isin(1, 7), 1).otherwise(0))
-        .cast("long")
-        .alias("n_b"),
-    ).localCheckpoint(eager=False)
+    counts = lineage_cut(
+        ev.groupBy("user_id").agg(
+            F.sum(F.when(~F.dayofweek("ts").isin(1, 7), 1).otherwise(0))
+            .cast("long")
+            .alias("n_a"),
+            F.sum(F.when(F.dayofweek("ts").isin(1, 7), 1).otherwise(0))
+            .cast("long")
+            .alias("n_b"),
+        )
+    )
 
     def topk(side: str) -> DataFrame:
         head = (
@@ -4137,13 +4146,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import pagerank
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    )
+    edges = _knn16_edges(emb)
     seeds = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("node")
     )
@@ -4940,14 +4943,12 @@ def _entropy_filter_from_tf(tf: DataFrame) -> DataFrame:
         token_entropy_from_tf,
     )
 
-    tf = tf.localCheckpoint(eager=False)
+    tf = lineage_cut(tf)
     ent = token_entropy_from_tf(tf).select(
         "doc_id", "n_tokens", "norm_entropy_permille"
     )
-    ce = (
-        cross_entropy_from_tf(tf)
-        .select("doc_id", "cross_entropy_micros")
-        .localCheckpoint(eager=False)
+    ce = lineage_cut(
+        cross_entropy_from_tf(tf).select("doc_id", "cross_entropy_micros")
     )
     m = ce.agg(
         F.expr(
@@ -5109,24 +5110,13 @@ def _entropy_filter_served_oracle() -> str:
     tags=("pipeline", "text", "filter", "stats"),
 )
 def corpus_filter_entropy_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bo_sql_spark.operators.text import (
-        cross_entropy_served,
-        doc_term_freq,
-        lm_smoothed_model,
-    )
+    from bo_sql_spark.operators.text import doc_term_freq, lm_fit
 
     docs = _t(spark, sf_dir)["documents"]
-    tf_all = doc_term_freq(docs).localCheckpoint(eager=False)
+    tf_all = lineage_cut(doc_term_freq(docs))
     model_tf = tf_all.filter(F.expr("doc_id % 10 != 0"))
     arr_tf = tf_all.filter(F.expr("doc_id % 10 = 0"))
-    terms, total = lm_smoothed_model(model_tf)
-    terms = terms.localCheckpoint(eager=False)
-    total = total.localCheckpoint(eager=False)
-    mean = cross_entropy_served(model_tf, terms, total).agg(
-        F.expr(
-            "CAST(SUM(cross_entropy_micros) DIV COUNT(*) AS BIGINT)"
-        ).alias("mean_ce")
-    )
+    terms, total, mean = lm_fit(model_tf)
     return _lm_filter_decisions(arr_tf, terms, total, mean).orderBy("doc_id")
 
 
@@ -5199,26 +5189,15 @@ def _stream_lm_decisions_store(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    from bo_sql_spark.operators.text import (
-        cross_entropy_served,
-        doc_term_freq,
-        lm_smoothed_model,
-    )
+    from bo_sql_spark.operators.text import doc_term_freq, lm_fit
 
     docs = _t(spark, sf_dir)["documents"]
     root = tempfile.mkdtemp(prefix="bosql_lmserve_stream_")
     # TRAIN: freeze model + threshold to the store, once
-    model_tf = doc_term_freq(
-        docs.filter(F.expr("doc_id % 10 != 0"))
-    ).localCheckpoint(eager=False)
-    terms, total = lm_smoothed_model(model_tf)
-    terms = terms.localCheckpoint(eager=False)
-    total = total.localCheckpoint(eager=False)
-    mean = cross_entropy_served(model_tf, terms, total).agg(
-        F.expr(
-            "CAST(SUM(cross_entropy_micros) DIV COUNT(*) AS BIGINT)"
-        ).alias("mean_ce")
+    model_tf = lineage_cut(
+        doc_term_freq(docs.filter(F.expr("doc_id % 10 != 0")))
     )
+    terms, total, mean = lm_fit(model_tf)
     terms.write.mode("overwrite").parquet(root + "/model_terms")
     total.select("_lnNV").crossJoin(mean).write.mode("overwrite").parquet(
         root + "/model_stats"
@@ -5227,9 +5206,9 @@ def _stream_lm_decisions_store(spark: SparkSession, sf_dir: str) -> str:
     decisions = root + "/decisions"
 
     def decide(batch_df, batch_id):
-        arr_tf = doc_term_freq(
-            batch_df.filter(F.expr("doc_id % 10 = 0"))
-        ).localCheckpoint(eager=False)
+        arr_tf = lineage_cut(
+            doc_term_freq(batch_df.filter(F.expr("doc_id % 10 = 0")))
+        )
         mterms = spark.read.parquet(root + "/model_terms")
         stats = spark.read.parquet(root + "/model_stats")
         _lm_filter_decisions(
@@ -5393,39 +5372,23 @@ def _lm_swap_oracle() -> str:
 def store_lm_model_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from bo_sql_spark.operators.text import (
-        cross_entropy_served,
-        doc_term_freq,
-        lm_smoothed_model,
-    )
+    from bo_sql_spark.operators.text import doc_term_freq, lm_fit
     from bo_sql_spark.sinks import snapshot_read, snapshot_write_cas
 
     docs = _t(spark, sf_dir)["documents"]
     root = tempfile.mkdtemp(prefix="bosql_lm_swap_") + "/model"
 
     def train(model_pred: str) -> DataFrame:
-        tf = doc_term_freq(docs.filter(F.expr(model_pred))).localCheckpoint(
-            eager=False
-        )
-        terms, total = lm_smoothed_model(tf)
-        terms = terms.localCheckpoint(eager=False)
-        total = total.localCheckpoint(eager=False)
-        mean = cross_entropy_served(tf, terms, total).agg(
-            F.expr(
-                "CAST(SUM(cross_entropy_micros) DIV COUNT(*) AS BIGINT)"
-            ).alias("mean_ce")
+        terms, total, mean = lm_fit(
+            lineage_cut(doc_term_freq(docs.filter(F.expr(model_pred))))
         )
         return terms.crossJoin(F.broadcast(total.select("_lnNV"))).crossJoin(
             F.broadcast(mean)
         )
 
     def serve(version: int, arr_pred: str) -> DataFrame:
-        model = snapshot_read(spark, root, version=version).localCheckpoint(
-            eager=False
-        )
-        arr_tf = doc_term_freq(docs.filter(F.expr(arr_pred))).localCheckpoint(
-            eager=False
-        )
+        model = lineage_cut(snapshot_read(spark, root, version=version))
+        arr_tf = lineage_cut(doc_term_freq(docs.filter(F.expr(arr_pred))))
         return _lm_filter_decisions(
             arr_tf,
             model.select("term", "_lngf1"),
@@ -8201,10 +8164,9 @@ def _pq_trained(spark: SparkSession, sf_dir: str, ks: int) -> DataFrame:
     # checkpoint the trained codebook: it is consumed THREE times
     # (driver arrays for the arrow encode, the ADC lookup table, and
     # its own derivation) and is broadcast-sized by construction
-    cb1 = (
-        S.pq_train_step(emb, cb0, m=m, dsub=dsub)
-        .select("sub", "code", "c_vec")
-        .localCheckpoint(eager=True)
+    cb1 = lineage_cut(
+        S.pq_train_step(emb, cb0, m=m, dsub=dsub).select("sub", "code", "c_vec"),
+        eager=True,
     )
     codes = S.pq_encode(emb, cb1, m=m, dsub=dsub)
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
@@ -8324,11 +8286,7 @@ def _opq_oracle() -> str:
 )
 def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    return S.knn_graph(emb, cents, k=5)
+    return S.knn_graph(emb, _cents16(emb), k=5)
 
 
 @register(
@@ -8453,10 +8411,9 @@ def similarity_opq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     rot = S.rotate_embeddings(emb, S.seeded_rotation_micro())
     m, dsub, ks = 8, 8, 256
     cb0 = S.pq_codebooks_from_seeds(rot, m=m, dsub=dsub, ks=ks)
-    cb1 = (
-        S.pq_train_step(rot, cb0, m=m, dsub=dsub)
-        .select("sub", "code", "c_vec")
-        .localCheckpoint(eager=True)
+    cb1 = lineage_cut(
+        S.pq_train_step(rot, cb0, m=m, dsub=dsub).select("sub", "code", "c_vec"),
+        eager=True,
     )
     codes = S.pq_encode(rot, cb1, m=m, dsub=dsub)
     qrow = rot.filter(F.col("vec_id") == 0).select("embedding").first()
@@ -8717,8 +8674,6 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("pipeline", "similarity", "approx"),
 )
 def similarity_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bo_sql_spark.parallel import lineage_cut
-
     emb = _t(spark, sf_dir)["embeddings"]
     # r15-opt (§5 one-consumer rule): stats feeds the encode AND the
     # topk decode; codes feeds the query row AND the corpus side — the
@@ -10437,10 +10392,7 @@ def dedup_semantic_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     emb_batch = _t(spark, sf_dir)["embeddings"]
-    cents = emb_batch.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
+    cents = _cents16(emb_batch)
     root = tempfile.mkdtemp(prefix="bosql_semdedup_stream_")
     store = os.path.join(root, "assignment")
     survivors = os.path.join(root, "survivors")
@@ -11040,6 +10992,23 @@ _KMV_OK = 512  # overlap-query sketch size
 _KMV_SHARDS = 32
 
 
+def _kmv_cut_sketch(hashes: DataFrame, k: int) -> DataFrame:
+    """The k-row sketch of an (h) hash table, lineage-cut: each sketch
+    feeds every set-op branch of a KMV query."""
+    from bo_sql_spark.operators import kmv as K
+
+    return lineage_cut(K.kmv_sketch_from_hashes(hashes, [], k, _KMV_SHARDS))
+
+
+def _kmv_two_sided(ha: DataFrame, hb: DataFrame, k: int):
+    """Cut two sides' (h) hash tables and their k-row sketches for a
+    two-sided KMV query: each hash table feeds its sketch AND the exact
+    count legs, so uncut each side is hashed once per branch. Returns
+    (ha, hb, ska, skb)."""
+    ha, hb = lineage_cut(ha), lineage_cut(hb)
+    return ha, hb, _kmv_cut_sketch(ha, k), _kmv_cut_sketch(hb, k)
+
+
 def _kmv_sh_cte(pred: str, name: str, keep_lang: bool = False) -> str:
     """DuckDB CTE replaying word_shingles(text, 3) under ``pred`` —
     same tokenization/slice construction as the Bloom oracle."""
@@ -11215,13 +11184,8 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the corpus is tokenized once per side, not once per branch.
     # The hash tables are vocabulary-grain (the idf-table precedent);
     # the sketches are k rows.
-    ha = hashes(F.col("doc_id") < 250).localCheckpoint(eager=False)
-    hb = hashes(F.col("doc_id") >= 250).localCheckpoint(eager=False)
-    ska = K.kmv_sketch_from_hashes(ha, [], _KMV_OK, _KMV_SHARDS).localCheckpoint(
-        eager=False
-    )
-    skb = K.kmv_sketch_from_hashes(hb, [], _KMV_OK, _KMV_SHARDS).localCheckpoint(
-        eager=False
+    ha, hb, ska, skb = _kmv_two_sided(
+        hashes(F.col("doc_id") < 250), hashes(F.col("doc_id") >= 250), _KMV_OK
     )
     est = K.kmv_set_estimates(ska, skb, _KMV_OK)
     # r14-opt (reopen): the four exact counts ran as FOUR separate
@@ -11415,9 +11379,7 @@ def sketch_kmv_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = docs.select(
         "lang", F.explode(word_shingles(F.col("text"), 3)).alias("shingle")
     ).filter(F.col("shingle") != "")
-    sk = K.kmv_sketch(sh, "shingle", ["lang"], _KMV_K, _KMV_SHARDS).localCheckpoint(
-        eager=False
-    )
+    sk = lineage_cut(K.kmv_sketch(sh, "shingle", ["lang"], _KMV_K, _KMV_SHARDS))
     return K.kmv_pairwise_jaccard(sk, "lang", _KMV_K)
 
 
@@ -11495,13 +11457,9 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import triangle_stats
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).localCheckpoint(eager=True)  # materialize the k*n edge list ONCE: the operator self-joins it, which would re-run the knn scoring (now an Arrow stage) per branch
+    # materialize the k*n edge list ONCE: the operator self-joins it,
+    # which would re-run the knn scoring (now an Arrow stage) per branch
+    edges = lineage_cut(_knn16_edges(emb), eager=True)
     return triangle_stats(edges)
 
 
@@ -11593,8 +11551,8 @@ def _kmv_user_overlap_result(
     from bo_sql_spark.operators import kmv as K
 
     ev = _t(spark, sf_dir)["events"]
-    ha = _kmv_user_hashes(ev, weekend=False).localCheckpoint(eager=False)
-    hb = _kmv_user_hashes(ev, weekend=True).localCheckpoint(eager=False)
+    ha = lineage_cut(_kmv_user_hashes(ev, weekend=False))
+    hb = lineage_cut(_kmv_user_hashes(ev, weekend=True))
     est = K.kmv_set_estimates(ska, skb, _KMV_UK)
     exact = (
         ha.agg(F.count(F.lit(1)).cast("long").alias("exact_a"))
@@ -11635,15 +11593,9 @@ def _kmv_user_overlap_result(
     tags=("pipeline", "sketch", "stats", "monitoring"),
 )
 def drift_user_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bo_sql_spark.operators import kmv as K
-
     ev = _t(spark, sf_dir)["events"]
-    ska = K.kmv_sketch_from_hashes(
-        _kmv_user_hashes(ev, weekend=False), [], _KMV_UK, _KMV_SHARDS
-    ).localCheckpoint(eager=False)
-    skb = K.kmv_sketch_from_hashes(
-        _kmv_user_hashes(ev, weekend=True), [], _KMV_UK, _KMV_SHARDS
-    ).localCheckpoint(eager=False)
+    ska = _kmv_cut_sketch(_kmv_user_hashes(ev, weekend=False), _KMV_UK)
+    skb = _kmv_cut_sketch(_kmv_user_hashes(ev, weekend=True), _KMV_UK)
     return _kmv_user_overlap_result(spark, sf_dir, ska, skb)
 
 
@@ -11702,18 +11654,12 @@ def stream_drift_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each feeds five set-op branches, and uncheckpointed the per-side
     # k-min window subtree would replay once per branch.
     stored = spark.read.parquet(store)
-    ska = K.kmv_sketch_from_hashes(
-        stored.filter(F.col("side") == "a").select("h").distinct(),
-        [],
-        _KMV_UK,
-        _KMV_SHARDS,
-    ).localCheckpoint(eager=False)
-    skb = K.kmv_sketch_from_hashes(
-        stored.filter(F.col("side") == "b").select("h").distinct(),
-        [],
-        _KMV_UK,
-        _KMV_SHARDS,
-    ).localCheckpoint(eager=False)
+    ska = _kmv_cut_sketch(
+        stored.filter(F.col("side") == "a").select("h").distinct(), _KMV_UK
+    )
+    skb = _kmv_cut_sketch(
+        stored.filter(F.col("side") == "b").select("h").distinct(), _KMV_UK
+    )
     return _kmv_user_overlap_result(spark, sf_dir, ska, skb)
 
 
@@ -11765,13 +11711,9 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import local_clustering
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).localCheckpoint(eager=True)  # materialize the k*n edge list ONCE: the operator self-joins it, which would re-run the knn scoring (now an Arrow stage) per branch
+    # materialize the k*n edge list ONCE: the operator self-joins it,
+    # which would re-run the knn scoring (now an Arrow stage) per branch
+    edges = lineage_cut(_knn16_edges(emb), eager=True)
     return local_clustering(edges)
 
 
@@ -11856,7 +11798,7 @@ def sketch_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators import kmv as K
 
     docs = _t(spark, sf_dir)["documents"].filter(F.col("text").isNotNull())
-    hashes = (
+    hashes = lineage_cut(
         docs.select(
             "lang",
             "source",
@@ -11865,11 +11807,10 @@ def sketch_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("shingle") != "")
         .select("lang", "source", K.kmv_hash("shingle").alias("h"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    cells = K.kmv_sketch_from_hashes(
-        hashes, ["lang", "source"], _KMV_RK, _KMV_SHARDS
-    ).localCheckpoint(eager=False)
+    cells = lineage_cut(
+        K.kmv_sketch_from_hashes(hashes, ["lang", "source"], _KMV_RK, _KMV_SHARDS)
+    )
     # rollups derive from the CELL sketches, not the base hash table —
     # the never-rescan claim this query grades
     lang_sk = K.kmv_sketch_from_hashes(
@@ -11978,13 +11919,10 @@ def drift_user_churn_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators import kmv as K
 
     ev = _t(spark, sf_dir)["events"]
-    ha = _kmv_user_hashes(ev, weekend=False).localCheckpoint(eager=False)
-    hb = _kmv_user_hashes(ev, weekend=True).localCheckpoint(eager=False)
-    ska = K.kmv_sketch_from_hashes(ha, [], _KMV_UK, _KMV_SHARDS).localCheckpoint(
-        eager=False
-    )
-    skb = K.kmv_sketch_from_hashes(hb, [], _KMV_UK, _KMV_SHARDS).localCheckpoint(
-        eager=False
+    ha, hb, ska, skb = _kmv_two_sided(
+        _kmv_user_hashes(ev, weekend=False),
+        _kmv_user_hashes(ev, weekend=True),
+        _KMV_UK,
     )
     est = K.kmv_churn_estimates(ska, skb, _KMV_UK)
     only_a = ha.join(hb, "h", "left_anti")
@@ -12066,14 +12004,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import modularity
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).localCheckpoint(eager=False)
-    cell_assign = S.ivf_assign(emb, cents).select(
+    edges = lineage_cut(_knn16_edges(emb))
+    cell_assign = S.ivf_assign(emb, _cents16(emb)).select(
         F.col("vec_id").alias("node"), F.col("cell").alias("community")
     )
     hash_assign = emb.select(
@@ -12154,13 +12086,7 @@ def graph_kcore_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import kcore_peel_trace
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    )
+    edges = _knn16_edges(emb)
     return kcore_peel_trace(edges, _KCORE_K, _KCORE_ROUNDS)
 
 
@@ -12211,13 +12137,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.operators.graph import assortativity
 
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").cast("array<double>").alias("c_vec"),
-    )
-    edges = S.knn_graph(emb, cents, k=5).select(
-        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-    ).localCheckpoint(eager=True)  # materialize the k*n edge list ONCE: the operator self-joins it, which would re-run the knn scoring (now an Arrow stage) per branch
+    # materialize the k*n edge list ONCE: the operator self-joins it,
+    # which would re-run the knn scoring (now an Arrow stage) per branch
+    edges = lineage_cut(_knn16_edges(emb), eager=True)
     return assortativity(edges)
 
 
@@ -12295,9 +12217,13 @@ def corpus_heaps_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.functions.fixedpoint import with_ln_micros
 
     docs = _t(spark, sf_dir)["documents"].filter(F.col("text").isNotNull())
-    hs = docs.select(
-        "lang", "doc_id", F.explode(word_shingles(F.col("text"), 3)).alias("shingle")
-    ).filter(F.col("shingle") != "").localCheckpoint(eager=False)
+    hs = lineage_cut(
+        docs.select(
+            "lang",
+            "doc_id",
+            F.explode(word_shingles(F.col("text"), 3)).alias("shingle"),
+        ).filter(F.col("shingle") != "")
+    )
     cnt = hs.groupBy("lang", "shingle").agg(F.count(F.lit(1)).cast("long").alias("c"))
     full = cnt.groupBy("lang").agg(
         F.sum("c").cast("long").alias("n_tokens"),

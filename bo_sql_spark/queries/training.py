@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from bo_sql_spark.catalog import load_tables
 from bo_sql_spark.operators import sampling as SA
 from bo_sql_spark.operators.sampling import PORTABLE_PRIME, portable_hash_sql
+from bo_sql_spark.parallel import lineage_cut
 from bo_sql_spark.queries import register
 
 
@@ -717,11 +718,7 @@ def training_pipeline_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bo_sql_spark.functions import tokens
     from bo_sql_spark.operators import corpus_filters as CF
     from bo_sql_spark.operators import dedup as D
-    from bo_sql_spark.operators.text import (
-        cross_entropy_served,
-        doc_term_freq,
-        lm_smoothed_model,
-    )
+    from bo_sql_spark.operators.text import doc_term_freq, lm_fit
     from bo_sql_spark.queries.pipeline import _lm_filter_decisions
     from bo_sql_spark.sinks import snapshot_read, snapshot_write_cas
 
@@ -739,9 +736,11 @@ def training_pipeline_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpointed: the decision table feeds both the keep semi join
     # and the provenance branch (one-consumer rule; it is doc-id grain,
     # never text).
-    g = CF.gopher_keep(train, rules=_E2E2_GOPHER_RULES).select(
-        "doc_id", "keep", "drop_reasons"
-    ).localCheckpoint(eager=False)
+    g = lineage_cut(
+        CF.gopher_keep(train, rules=_E2E2_GOPHER_RULES).select(
+            "doc_id", "keep", "drop_reasons"
+        )
+    )
     gkeep = train.join(
         g.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
     )
@@ -749,15 +748,8 @@ def training_pipeline_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 2: LM filter, served from the VERSIONED model store —
     # trained on the gopher-kept corpus, one CAS commit, decisions
     # carry the committed version (deterministically 1: fresh store)
-    tf = doc_term_freq(gkeep).localCheckpoint(eager=False)
-    terms, total = lm_smoothed_model(tf)
-    terms = terms.localCheckpoint(eager=False)
-    total = total.localCheckpoint(eager=False)
-    mean = cross_entropy_served(tf, terms, total).agg(
-        F.expr("CAST(SUM(cross_entropy_micros) DIV COUNT(*) AS BIGINT)").alias(
-            "mean_ce"
-        )
-    )
+    tf = lineage_cut(doc_term_freq(gkeep))
+    terms, total, mean = lm_fit(tf)
     root = tempfile.mkdtemp(prefix="bosql_e2e_v2_") + "/model"
     v = snapshot_write_cas(
         spark,
@@ -766,7 +758,7 @@ def training_pipeline_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         root,
     )
-    model = snapshot_read(spark, root, version=v).localCheckpoint(eager=False)
+    model = lineage_cut(snapshot_read(spark, root, version=v))
     lmdec = _lm_filter_decisions(
         tf,
         model.select("term", "_lngf1"),
@@ -779,9 +771,11 @@ def training_pipeline_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verify sides, survivor joins) and each would otherwise re-run the
     # scan + both filters. The filters-before-dedup ordering this buys
     # is pinned structurally by tests/test_plans.py.
-    kept2 = gkeep.join(
-        lmdec.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
-    ).localCheckpoint(eager=False)
+    kept2 = lineage_cut(
+        gkeep.join(
+            lmdec.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
+        )
+    )
 
     # stage 3: portable MinHash near-dup dedup — the first wide stage;
     # its shingle explode and band shuffle see only the filtered corpus

@@ -1050,6 +1050,33 @@ def test_misra_gries_summary_bounds(spark):
     assert all(r.est <= true[r.term] for r in pdf.itertuples())
 
 
+def test_misra_gries_emit_total(spark):
+    """emit_total=True: one NULL-key row per non-empty partition whose
+    ``est`` sums to the exact row count — also when the trim empties a
+    partition's counters (all counts tie with the (m+1)-th), and with a
+    numeric key column."""
+    from bo_sql_spark.operators.heavy_hitters import misra_gries_candidates
+
+    # 10 long keys x 3 rows on ONE partition, m=4: every count ties
+    # with the 5th largest, so the trim leaves no candidate at all
+    ties = spark.range(30).select((F.col("id") % 10).alias("k")).coalesce(1)
+    rows = misra_gries_candidates(ties, "k", m=4, emit_total=True).collect()
+    assert [(r["k"], r["est"]) for r in rows] == [(None, 30)]
+
+    skew = spark.range(1000).select(
+        F.when(F.col("id") % 2 == 0, F.lit(7)).otherwise(F.col("id")).alias("k")
+    ).repartition(3)
+    cand = misra_gries_candidates(skew, "k", m=4, emit_total=True)
+    assert dict(cand.dtypes)["k"] == "bigint"
+    pdf = cand.toPandas()
+    totals = pdf[pdf["k"].isna()]
+    assert len(totals) == 3
+    assert int(totals["est"].sum()) == skew.count()
+    keys = pdf[pdf["k"].notna()]
+    assert 7 in set(keys["k"].astype("int64"))
+    assert all(e <= 500 for e in keys[keys["k"] == 7]["est"])
+
+
 def test_semantic_dedup_incremental_equals_full_rerun(spark, sf_dir):
     """Probing the full corpus assignment must be byte-equivalent to
     rerunning batch SemDeDup over corpus+batch and restricting to the

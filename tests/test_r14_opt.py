@@ -45,6 +45,57 @@ def test_lineage_cut_identity_and_disable(spark, monkeypatch):
     assert sorted(r.id for r in cut.collect()) == list(range(100))
     monkeypatch.setenv("BOSQL_CKPT_DISABLE", "1")
     assert lineage_cut(df) is df
+    # eager cuts order side effects, so the switch does not reach them
+    eager = lineage_cut(df, eager=True)
+    assert eager is not df
+    assert "LogicalRDD" in eager._jdf.queryExecution().analyzed().toString()
+    assert sorted(r.id for r in eager.collect()) == list(range(100))
+
+
+def test_only_parallel_calls_local_checkpoint():
+    """Every lineage cut goes through parallel.lineage_cut, so the
+    BOSQL_CKPT_DISABLE switch reaches every lazy cut in the package."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "bo_sql_spark"
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "localCheckpoint(" in p.read_text()
+    )
+    assert callers == ["parallel.py"]
+
+
+def test_mad_cuts_follow_ckpt_switch(spark, monkeypatch):
+    """robust_outliers_from_counts' two lazy cuts honour the switch:
+    no LogicalRDD leaf under BOSQL_CKPT_DISABLE=1, same rows either
+    way."""
+    from bo_sql_spark.operators.drift import robust_outliers_from_counts
+
+    counts = spark.range(60).select(
+        (F.col("id") % 3).alias("grp"),
+        (F.col("id") * 7 % 23).cast("double").alias("_x"),
+        (F.col("id") % 4 + 1).alias("_c"),
+    ).unionByName(
+        spark.range(1).select(
+            F.lit(0).cast("long").alias("grp"),
+            F.lit(1000.0).alias("_x"),
+            F.lit(1).cast("long").alias("_c"),
+        )
+    )
+
+    def run():
+        out = robust_outliers_from_counts(counts)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return plan.count("LogicalRDD"), [tuple(r) for r in out.collect()]
+
+    rdds_on, rows_on = run()
+    monkeypatch.setenv("BOSQL_CKPT_DISABLE", "1")
+    rdds_off, rows_off = run()
+    assert rdds_on > 0
+    assert rdds_off == 0
+    assert rows_off == rows_on
+    assert rows_on[0][4] >= 1  # the planted x=1000 row is an outlier
 
 
 def _toy_emb(spark):
