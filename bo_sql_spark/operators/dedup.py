@@ -345,7 +345,8 @@ def lsh_band_pairs_salted(
     a bucket of B co-colliding docs no longer generates its B*(B-1)/2
     pairs inside ONE reduce task.
 
-    Why AQE can't fix this (measured in tools_scaling_r7.py): a viral
+    Why AQE can't fix this (measured in SCALE.md round 7,
+    `git show 2f725f8:tools_scaling_r7.py`): a viral
     template shared by 5% of a corpus puts thousands of ids into one
     (band, h) bucket. The self-join INPUT for that key is tiny — a few
     KB of ids — so AQE's skew-join split, which triggers on input
@@ -1805,7 +1806,8 @@ def dedup_lines_global(
     distinct seeds), so the dedup exchange moves fixed ~28-byte rows
     instead of corpus text; chunk TEXT crosses exactly ONE exchange —
     the per-doc rebuild join — cutting total shuffle bytes ~2x vs the
-    r8 text-keyed form (measured: tools_scaling_r9.py / SCALE.md).
+    r8 text-keyed form (measured: SCALE.md round 9,
+    `git show 2f725f8:tools_scaling_r9.py`).
     The keep decisions are aggregated per doc into a sorted index
     array (fixed-width groupBy, already partitioned by doc when it
     reaches the join), then joined back to the tokenized doc row and
@@ -1865,10 +1867,11 @@ def dedup_lines_global(
     )
     # rebuild: one text-bearing exchange (the doc-keyed join), moving
     # the RAW text string — NOT the token array, whose UnsafeRow
-    # element overhead is ~2-3x the text bytes (measured,
-    # tools_scaling_r9.py); tokenization re-runs post-join (CPU for
-    # shuffle bytes, the right trade). kept is already hash-partitioned
-    # by doc from its groupBy, so only the text side shuffles.
+    # element overhead is ~2-3x the text bytes (measured, SCALE.md
+    # round 9, `git show 2f725f8:tools_scaling_r9.py`); tokenization
+    # re-runs post-join (CPU for shuffle bytes, the right trade). kept
+    # is already hash-partitioned by doc from its groupBy, so only the
+    # text side shuffles.
     joined = d0.join(kept, id_col, "left").withColumn(
         "_tok", tokens(F.col("_text"))
     )

@@ -1640,7 +1640,8 @@ def ivfpq_encode(
     # Seed the residual codebooks PAST the coarse-centroid seed ids:
     # those vectors' residuals are exactly zero, so seeding from them
     # yields a degenerate all-zero codebook (measured recall collapse,
-    # tools_ann_recall.py). Assumes centroid seeds occupy ids < ks.
+    # SCALE.md, `git show 2f725f8:tools_ann_recall.py`). Assumes
+    # centroid seeds occupy ids < ks.
     codebooks = pq_codebooks_from_seeds(
         resid, m=m, dsub=dsub, ks=ks, id_col=id_col, vec_col="r",
         seed_from=ks,

@@ -6657,8 +6657,8 @@ def stream_search_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     "because sf fixtures are MBs (a 100 TB fact table clears the "
     "default by itself), plus the broadcast disable that models the "
     "regime. Measured at sf0.1: 0.9% of the fact shuffle survives "
-    "(SCALE.md, tools_bloom_join.py). Integer-cents revenue keeps the "
-    "oracle hash-exact.",
+    "(SCALE.md, `git show 2f725f8:tools_bloom_join.py`). "
+    "Integer-cents revenue keeps the oracle hash-exact.",
     tags=("pipeline", "join", "bloom"),
 )
 def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:

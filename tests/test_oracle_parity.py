@@ -163,3 +163,29 @@ def test_auto_tier_oracles_cover_rules_and_fixtures():
         # the probe queries gate on the corpus EXCLUDING the query row
         assert 1 <= n - 1 <= probe_max, (f, n, "extend _RP_PROBE_TIERS")
         assert n <= _IVF_AUTO_MAX_N, (f, n, "extend the ivf oracle CASE")
+
+
+def test_rehearsal_unknown_name_exits_2_before_spark(monkeypatch, tmp_path):
+    """The oracle gate rejects a misspelt query name with exit code 2
+    before it syncs docs or starts a Spark session, also when run by
+    path from another working directory."""
+    import subprocess
+    import sys
+
+    import tools_gen_queries_md
+    import tools_rehearsal
+
+    def boom(*a, **k):
+        raise AssertionError("ran past the unknown-name check")
+
+    monkeypatch.setattr(tools_rehearsal, "_session", boom)
+    monkeypatch.setattr(tools_gen_queries_md, "main", boom)
+    assert tools_rehearsal.main(["no_such_query"]) == 2
+    assert tools_rehearsal.main(["/any/sf_dir", "scan_project", "no_such_query"]) == 2
+
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(tools_rehearsal.__file__), "no_such_query"],
+        cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 2, proc.stdout + proc.stderr
+    assert "UNKNOWN: ['no_such_query']" in proc.stdout

@@ -9,6 +9,10 @@ top-N trimmed below the shuffle.
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+
 import pytest
 
 from bo_sql_spark.plans import (
@@ -589,6 +593,49 @@ def test_plan_baseline_diff_catches_seeded_regression():
     assert list(flags) == ["q1"] and "exchanges 1 -> 2" in flags["q1"][0]
     assert any(n.startswith("IMPROVED q2: smj") for n in notes)
     assert any(n.startswith("NEW q3") for n in notes)
+
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+GATE_SCRIPTS = {
+    "tools_bench_compare.py",
+    "tools_gen_queries_md.py",
+    "tools_plan_lint.py",
+    "tools_rehearsal.py",
+}
+
+
+def test_plan_baseline_sits_beside_the_lint():
+    """A lint run from another checkout reads and rewrites that
+    checkout's baseline, never a fixed path."""
+    import tools_plan_lint
+
+    assert tools_plan_lint.BASELINE_PATH == os.path.join(
+        os.path.dirname(os.path.abspath(tools_plan_lint.__file__)),
+        "PLAN_BASELINE.json",
+    )
+
+
+def test_root_toolkit_is_the_gate_scripts():
+    """The repo root keeps only the scripts a test imports or a gate
+    runs; one-off measurement scripts live in git history."""
+    found = {os.path.basename(p) for p in glob.glob(os.path.join(_ROOT, "tools_*.py"))}
+    assert found == GATE_SCRIPTS
+
+
+def test_cited_tools_scripts_resolve():
+    """Every tools_* script named in the package, bench.py, README.md,
+    ROADMAP.md or the verify skill exists at the root, or is cited as
+    `git show <sha>:tools_X.py` so the reader can still fetch it."""
+    paths = glob.glob(os.path.join(_ROOT, "bo_sql_spark", "**", "*.py"), recursive=True)
+    paths += glob.glob(os.path.join(_ROOT, ".claude", "skills", "**", "*.md"), recursive=True)
+    paths += [os.path.join(_ROOT, f) for f in ("bench.py", "README.md", "ROADMAP.md")]
+    missing = []
+    for path in paths:
+        text = open(path).read()
+        for m in re.finditer(r"(git show \S+:)?\b(tools_\w+)", text):
+            if not m[1] and not os.path.exists(os.path.join(_ROOT, m[2] + ".py")):
+                missing.append(f"{os.path.relpath(path, _ROOT)}: {m[2]}")
+    assert not missing, missing
 
 
 def test_e2e_v2_filters_before_dedup_shuffle(spark, sf_dir):

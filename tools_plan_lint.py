@@ -31,18 +31,18 @@ NEW lines.
 Builders with side effects (index materialization, stream drains)
 execute during build — that is the same cost the rehearsal pays.
 
-Usage: python tools_plan_lint.py [sf_dir]
+Usage: python tools_plan_lint.py [sf_dir] [--write-baseline]
+
+Exit code: 0 when no plan is flagged, 1 when any plan is flagged (so
+the "0 flagged plans" gate is the exit code). The package and
+PLAN_BASELINE.json are those of this script's own checkout.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
-
-sys.path.insert(0, "/root/repo")
-
-_pos = [a for a in sys.argv[1:] if not a.startswith("--")]
-SF = _pos[0] if _pos else "/root/testdata/sf0.001"
 
 _AGG_NODES = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
 # A window whose subtree contains a row-LIMIT is bounded by the limit
@@ -347,7 +347,9 @@ def plan_signature(plan: str) -> dict[str, int]:
     }
 
 
-BASELINE_PATH = "/root/repo/PLAN_BASELINE.json"
+BASELINE_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "PLAN_BASELINE.json"
+)
 
 
 def diff_signatures(
@@ -377,14 +379,17 @@ def diff_signatures(
     return flags, notes
 
 
-def main() -> None:
+def main(argv: list[str]) -> int:
     import json
 
     from pyspark.sql import SparkSession
 
+    from __spark_entry__ import SMOKE_SF_DIR
     from bo_sql_spark.queries import load_all
 
-    write_baseline = "--write-baseline" in sys.argv
+    write_baseline = "--write-baseline" in argv
+    pos = [a for a in argv if not a.startswith("--")]
+    sf = pos[0] if pos else SMOKE_SF_DIR
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -398,7 +403,7 @@ def main() -> None:
     sigs: dict[str, dict[str, int]] = {}
     for name, spec in sorted(load_all().items()):
         try:
-            df = spec.builder(spark, SF)
+            df = spec.builder(spark, sf)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # pragma: no cover - registration gates
             flags.setdefault(name, []).append(f"BUILD-ERROR {type(exc).__name__}")
@@ -467,7 +472,8 @@ def main() -> None:
         f"global windows whitelisted, {measured_ok} input-row-measured "
         f"against invariant ceilings)"
     )
+    return 1 if flags else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))
