@@ -453,14 +453,15 @@ def sampled_quantiles(
     trick, sampling.py), and only the target ranks survive. r15-opt
     (guide §5, driver round-trips): the count/min/max stats that sized
     the shards and ranks used to be a SEPARATE scalar ``.first()``
-    action per build; they are now a one-row aggregate CROSS-JOINED
-    (broadcast) into the plan, with the rank arithmetic moved into SQL
-    — the whole build is ONE job. Same exact integer-micros rank math
-    (q_micros * n in int64, both engines). Emits one row per quantile:
-    (q double, sample_n long, est double); an empty sample (d too
-    large for the corpus) now yields an EMPTY result — the same answer
-    the DuckDB replay gives — instead of the former eager ValueError
-    (no scalar action is left to raise from)."""
+    action per build; now min/max are a one-row aggregate CROSS-JOINED
+    (broadcast) into the plan, the count is the sum of the per-shard
+    totals carried by the offsets table, and the rank arithmetic runs
+    in SQL — the whole build is ONE job. Same exact integer-micros
+    rank math (q_micros * n in int64, both engines). Emits one row
+    per quantile: (q double, sample_n long, est double); an empty
+    sample (d too large for the corpus) now yields an EMPTY result —
+    the same answer the DuckDB replay gives — instead of the former
+    eager ValueError (no scalar action is left to raise from)."""
     if int(d) <= 0 or not qs:
         raise ValueError("d must be positive and qs non-empty")
     from pyspark.sql import Window
@@ -480,11 +481,11 @@ def sampled_quantiles(
         .filter(F.pmod(h, F.lit(int(d))) == 0)
         .select(F.col(value_col).cast("double").alias("_x"))
     )
-    stats = samp.agg(
-        F.count(F.lit(1)).cast("long").alias("_n"),
-        F.min("_x").alias("_mn"),
-        F.max("_x").alias("_mx"),
-    )
+    # min/max only: the sample size rides the offsets table instead,
+    # so both consumers of ``staged`` read the SAME stats subtree and
+    # AQE reuses its exchange (a count kept here was pruned from one
+    # consumer only, which made the two copies canonically different)
+    stats = samp.agg(F.min("_x").alias("_mn"), F.max("_x").alias("_mx"))
     ns = int(n_shards)
     span = F.when(F.col("_mx") - F.col("_mn") == 0.0, F.lit(1.0)).otherwise(
         F.col("_mx") - F.col("_mn")
@@ -499,10 +500,18 @@ def sampled_quantiles(
     totals = staged.groupBy("_shard").agg(
         F.count(F.lit(1)).cast("long").alias("_tot")
     )
-    wo = Window.orderBy("_shard").rowsBetween(Window.unboundedPreceding, -1)
+    wo = Window.orderBy("_shard")
     offsets = totals.select(
         "_shard",
-        F.coalesce(F.sum("_tot").over(wo), F.lit(0)).cast("long").alias("_off"),
+        F.coalesce(
+            F.sum("_tot").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0),
+        ).cast("long").alias("_off"),
+        # the sample size n = the sum of every shard's total
+        F.sum("_tot")
+        .over(wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .cast("long")
+        .alias("_n"),
     )
     # ceil(q*n) in exact integer arithmetic: q as micros (q_micros*n is
     # exact for q with <= 6 decimals) — float ceil can land one rank

@@ -35,7 +35,7 @@ text_token_count): lowercase, collapse whitespace, split on space.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 # serve-time memo for bm25_served's _terms build-stamp check:
 # terms_path -> ((terms mtime_ms, stats mtime_ms), verdict). Keyed on
@@ -374,6 +374,41 @@ def _proximity_fold(
     )
 
 
+# The schemas the store's writers produce, column for column as a
+# reader sees them (hive partition column ``tb`` last). Every read of a
+# store table passes its schema, so opening a table infers nothing: no
+# footer-reading job runs before the read's own job.
+# tests/test_scale_ops.py pins these against every writer.
+STATS_SCHEMA = "n_docs long, sum_dl long"
+TERMS_SCHEMA = (
+    "term string, idf_micros long, n_docs long, sum_dl long, df long, tb int"
+)
+
+
+def postings_schema(id_col: str = "doc_id") -> str:
+    """The postings table's schema for a store keyed by ``id_col``."""
+    return (
+        f"`{id_col}` long, term string, tf long, positions array<long>,"
+        " dl long, tb int"
+    )
+
+
+def _term_bucket(term: Column, n_term_buckets: int) -> Column:
+    """The store's partition key ``tb`` of a term: one definition for
+    the writers (over the term column) and the readers (over literals)."""
+    return F.pmod(F.xxhash64(term), F.lit(int(n_term_buckets)))
+
+
+def _bucket_filter(terms: list[str], n_term_buckets: int) -> Column:
+    """``tb IN (buckets of terms) AND term IN (terms)``. Each bucket id
+    is ``_term_bucket`` over a literal, so Catalyst constant-folds it
+    and the scan keeps a literal ``tb IN (...)`` PartitionFilter: only
+    the query terms' bucket directories are read, and no driver job
+    computes the buckets."""
+    buckets = [_term_bucket(F.lit(t), n_term_buckets).cast("int") for t in terms]
+    return F.col("tb").isin(*buckets) & F.col("term").isin(list(terms))
+
+
 def materialize_inverted_index(
     docs: DataFrame,
     path: str,
@@ -423,7 +458,7 @@ def materialize_inverted_index(
     )
     dl = post0.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
     post = post0.join(dl, id_col).withColumn(
-        "tb", F.pmod(F.xxhash64("term"), F.lit(int(n_term_buckets)))
+        "tb", _term_bucket(F.col("term"), n_term_buckets)
     )
     # r14-opt: cluster by the partition column before the partitioned
     # write (guide §6.2) — files per bucket stay ONE regardless of the
@@ -446,13 +481,13 @@ def materialize_inverted_index(
     # have this table (appends would stale it) — bm25_served falls
     # back to computing idf from the pruned postings, bit-identically.
     spark = docs.sparkSession
-    written = spark.read.parquet(path)
+    written = spark.read.schema(postings_schema(id_col)).parquet(path)
     df_ = written.groupBy("term").agg(
         F.count_distinct(id_col).cast("long").alias("df")
     )
-    corpus = spark.read.parquet(path.rstrip("/") + "_stats")
+    corpus = spark.read.schema(STATS_SCHEMA).parquet(path.rstrip("/") + "_stats")
     bm25_term_idf(df_, corpus, idf_mode="log").join(df_, "term").withColumn(
-        "tb", F.pmod(F.xxhash64("term"), F.lit(int(n_term_buckets)))
+        "tb", _term_bucket(F.col("term"), n_term_buckets)
     ).repartition("tb").write.mode("overwrite").partitionBy("tb").parquet(
         path.rstrip("/") + "_terms"
     )
@@ -506,7 +541,7 @@ def append_postings(
     dl = post0.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
     (
         post0.join(dl, id_col)
-        .withColumn("tb", F.pmod(F.xxhash64("term"), F.lit(int(n_term_buckets))))
+        .withColumn("tb", _term_bucket(F.col("term"), n_term_buckets))
         .repartition("tb")
         .write.mode("append")
         .partitionBy("tb")
@@ -518,7 +553,7 @@ def append_postings(
         F.sum("dl").cast("long").alias("sum_dl"),
     )
     if fsutil.exists(spark, stats_path):
-        prev = spark.read.parquet(stats_path).first()
+        prev = spark.read.schema(STATS_SCHEMA).parquet(stats_path).first()
         batch_stats = batch_stats.select(
             (F.col("n_docs") + F.lit(int(prev["n_docs"]))).alias("n_docs"),
             (F.col("sum_dl") + F.lit(int(prev["sum_dl"]))).alias("sum_dl"),
@@ -526,7 +561,7 @@ def append_postings(
     # rewrite through a staging dir: parquet overwrite deletes-then-
     # writes, and the source of the new row includes the old table
     new_rows = [tuple(r) for r in batch_stats.collect()]
-    spark.createDataFrame(new_rows, "n_docs long, sum_dl long").write.mode(
+    spark.createDataFrame(new_rows, STATS_SCHEMA).write.mode(
         "overwrite"
     ).parquet(stats_path)
 
@@ -567,19 +602,17 @@ def search_served(
 ) -> DataFrame:
     """Conjunctive search answered from a materialized inverted index.
 
-    The query terms' buckets are computed with the same engine hash
-    (one tiny local job — the scalar edge every served index pays, cf.
-    ivf_topk_served's probe cells), and ``tb IN (buckets)`` lands on
-    the partition column: PartitionFilters in the plan, only those
-    directories are read. Emits (id, n_terms_hit, tf_sum) for docs
-    containing ALL terms."""
+    The query terms' buckets are the writer's hash over literals,
+    folded by Catalyst into ``tb IN (buckets)`` on the partition
+    column: PartitionFilters in the plan, only those directories are
+    read, and building the DataFrame fires no Spark job. Emits
+    (id, n_terms_hit, tf_sum) for docs containing ALL terms."""
     if not terms:
         raise ValueError("search_served needs at least one term")
     uniq = sorted(set(terms))
-    buckets = _query_buckets(spark, uniq, n_term_buckets)
-    idx = spark.read.parquet(index_path)
+    idx = spark.read.schema(postings_schema(id_col)).parquet(index_path)
     return (
-        idx.filter(F.col("tb").isin(buckets) & F.col("term").isin(uniq))
+        idx.filter(_bucket_filter(uniq, n_term_buckets))
         .groupBy(id_col)
         .agg(
             F.count_distinct("term").alias("_nt"),
@@ -588,16 +621,6 @@ def search_served(
         .filter(F.col("_nt") == len(uniq))
         .select(id_col, F.col("_nt").cast("long").alias("n_terms_hit"), "tf_sum")
     )
-
-
-def _query_buckets(spark, terms: list[str], n_term_buckets: int) -> list[int]:
-    return [
-        r["tb"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(int(n_term_buckets))).alias("tb"))
-        .distinct()
-        .collect()
-    ]
 
 
 def bm25_served(
@@ -635,11 +658,8 @@ def bm25_served(
     from bo_sql_spark import fsutil
 
     uniq = sorted(set(terms))
-    buckets = _query_buckets(spark, uniq, n_term_buckets)
-    post = (
-        spark.read.parquet(index_path)
-        .filter(F.col("tb").isin(buckets) & F.col("term").isin(uniq))
-    )
+    pruned = _bucket_filter(uniq, n_term_buckets)
+    post = spark.read.schema(postings_schema(id_col)).parquet(index_path).filter(pruned)
     terms_path = index_path.rstrip("/") + "_terms"
     use_terms = idf_mode == "log" and fsutil.exists(spark, terms_path)
     if use_terms:
@@ -653,10 +673,10 @@ def bm25_served(
         # amortized. Cost: two 1-row driver reads on the FIRST serve;
         # repeat serves in a resident session skip the re-read via an
         # mtime-keyed memo (a rebuild rewrites both tables, changing
-        # the mtimes; an append deletes ``_terms`` entirely), keeping
-        # the amortized path's per-query cost at _query_buckets'
-        # scalar-edge budget (measured: the uncached check is ~70ms,
-        # comparable to the fallback's whole df aggregate at small SF).
+        # the mtimes; an append deletes ``_terms`` entirely), so a
+        # repeat serve builds its DataFrame without firing any Spark
+        # job (measured: the uncached check is ~70ms, comparable to
+        # the fallback's whole df aggregate at small SF).
         stats_path = index_path.rstrip("/") + "_stats"
         memo_key = terms_path
         try:
@@ -669,12 +689,12 @@ def bm25_served(
             use_terms = cached[1]
         else:
             t_row = (
-                spark.read.parquet(terms_path)
-                .filter(F.col("tb").isin(buckets) & F.col("term").isin(uniq))
+                spark.read.schema(TERMS_SCHEMA).parquet(terms_path)
+                .filter(pruned)
                 .select("n_docs", "sum_dl")
                 .first()
             )
-            s_row = spark.read.parquet(stats_path).first()
+            s_row = spark.read.schema(STATS_SCHEMA).parquet(stats_path).first()
             if t_row is not None and (
                 t_row["n_docs"] != s_row["n_docs"]
                 or t_row["sum_dl"] != s_row["sum_dl"]
@@ -687,8 +707,8 @@ def bm25_served(
         # postings, no per-query ln chain. Identical values by
         # construction (the SAME fixed-point steps ran at build).
         idf = (
-            spark.read.parquet(terms_path)
-            .filter(F.col("tb").isin(buckets) & F.col("term").isin(uniq))
+            spark.read.schema(TERMS_SCHEMA).parquet(terms_path)
+            .filter(pruned)
             .select("term", "idf_micros", "n_docs", "sum_dl")
         )
     else:
@@ -696,7 +716,9 @@ def bm25_served(
         # appends would stale it) and the linear surrogate: df from
         # the pruned postings is exact because pruning keeps every
         # posting of the query terms.
-        stats = spark.read.parquet(index_path.rstrip("/") + "_stats")
+        stats = spark.read.schema(STATS_SCHEMA).parquet(
+            index_path.rstrip("/") + "_stats"
+        )
         df_ = post.groupBy("term").agg(
             F.count_distinct(id_col).cast("long").alias("df")
         )
@@ -716,11 +738,10 @@ def _served_position_hits(
     per-word payload (phrase index / proximity bit) via a broadcast
     k-row map. Explosion happens AFTER pruning — per-hit cost."""
     words = sorted({w for w, _ in word_map})
-    buckets = _query_buckets(spark, words, n_term_buckets)
     qdf = spark.createDataFrame(word_map, f"term string, {payload_col} long")
     return (
-        spark.read.parquet(index_path)
-        .filter(F.col("tb").isin(buckets) & F.col("term").isin(words))
+        spark.read.schema(postings_schema(id_col)).parquet(index_path)
+        .filter(_bucket_filter(words, n_term_buckets))
         .join(F.broadcast(qdf), "term")
         .select(
             id_col,

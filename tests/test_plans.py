@@ -360,6 +360,20 @@ def test_bm25_served_prunes_both_stores(spark, sf_dir, tmp_path):
         assert "text" not in plan.split("ReadSchema")[1][:200], plan
 
 
+@pytest.mark.parametrize("name", ["sketch_quantile_sampled", "stream_sketch_quantiles"])
+def test_sampled_quantiles_reuses_stats_exchange(spark, sf_dir, name):
+    """The one-row min/max stats aggregate feeds two consumers of the
+    staged sample (the per-shard totals and the ranked window). Both
+    must read the same columns of it, so the AQE final plan builds its
+    exchange once and reuses it; the sample size comes from the
+    offsets table, not from a count pruned from one copy only."""
+    df = _df(spark, sf_dir, name)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    assert plan.count("ReusedExchange") >= 1, plan
+
+
 def test_sq8_batch_served_one_plan_no_serial(spark, sf_dir):
     """Batch SQ8 serving: both queries answered by one plan with
     broadcast probes onto the code store and a windowed top-k — no

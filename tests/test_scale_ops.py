@@ -651,6 +651,266 @@ def test_compact_postings_store_shrinks_files_and_preserves_serving(spark, tmp_p
     assert post_bm == pre_bm
 
 
+def test_store_schema_constants_match_every_writer(spark, tmp_path):
+    """The served readers open every store table with a fixed schema
+    instead of inferring it, so each writer must produce exactly that
+    schema: the batch build (default and custom id column), the append
+    path and the compaction rewrite. A writer that drifts fails here
+    instead of breaking reads."""
+    from pyspark.sql.types import StructType
+
+    from bo_sql_spark import fsutil
+    from bo_sql_spark.operators.search import (
+        STATS_SCHEMA,
+        TERMS_SCHEMA,
+        append_postings,
+        compact_postings_store,
+        materialize_inverted_index,
+        postings_schema,
+    )
+
+    def check(path, id_col, has_terms=True):
+        want = {
+            "": postings_schema(id_col),
+            "_stats": STATS_SCHEMA,
+            "_terms": TERMS_SCHEMA,
+        }
+        for suffix, ddl in want.items():
+            if suffix == "_terms" and not has_terms:
+                assert not fsutil.exists(spark, path + suffix)
+                continue
+            got = spark.read.parquet(path + suffix).schema
+            assert got == StructType.fromDDL(ddl), (path + suffix, got)
+
+    corpus = [(1, "spark join scan"), (2, "join vector"), (3, "merge sort sort")]
+    default = str(tmp_path / "default_idx")
+    materialize_inverted_index(
+        spark.createDataFrame(corpus, "doc_id long, text string"),
+        default, n_term_buckets=8,
+    )
+    check(default, "doc_id")
+
+    custom = str(tmp_path / "custom_idx")
+    materialize_inverted_index(
+        spark.createDataFrame(corpus, "vid long, body string"),
+        custom, id_col="vid", text_col="body", n_term_buckets=8,
+    )
+    check(custom, "vid")
+    compact_postings_store(spark, custom, target_rows_per_file=10_000)
+    check(custom, "vid")
+    append_postings(
+        spark.createDataFrame([(4, "spark vector")], "vid long, body string"),
+        custom, id_col="vid", text_col="body", n_term_buckets=8,
+    )
+    check(custom, "vid", has_terms=False)
+    compact_postings_store(spark, custom, target_rows_per_file=10_000)
+    check(custom, "vid", has_terms=False)
+
+
+def _bucket_of(spark, word, n):
+    return (
+        spark.createDataFrame([(word,)], "term string")
+        .select(F.pmod(F.xxhash64("term"), F.lit(n)).alias("tb"))
+        .first()["tb"]
+    )
+
+
+def test_served_reads_fire_no_jobs_while_building(spark, tmp_path):
+    """Building a served read's DataFrame fires no Spark job: the
+    query terms' buckets fold into the scan filter as literals, and
+    every store table opens with its written schema (no inference
+    job). The one exception kept on purpose is the first ``_terms``
+    read after a rebuild, whose build-stamp check reads two rows; a
+    repeat read reuses the memoized verdict. The executed plan still
+    prunes on a literal ``tb IN (...)`` of exactly the terms' buckets."""
+    import re
+
+    from bo_sql_spark.operators.search import (
+        append_postings,
+        bm25_served,
+        materialize_inverted_index,
+        phrase_served,
+        proximity_served,
+        search_served,
+    )
+
+    sc = spark.sparkContext
+    corpus = [
+        (1, "hash join beats sort merge join"),
+        (2, "join hash vector"),
+        (3, "spark scan hash join"),
+    ]
+    path = str(tmp_path / "nojobidx")
+    materialize_inverted_index(
+        spark.createDataFrame(corpus, "doc_id long, text string"),
+        path, n_term_buckets=16,
+    )
+    terms = ["hash", "join"]
+
+    want = {_bucket_of(spark, t, 16) for t in terms}
+
+    def check(name, build):
+        group = f"nojob.{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = build()
+            n = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("idle", "idle")
+        assert n == 0, (name, n)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lits = re.findall(r"PartitionFilters: \[tb#\d+ IN \(([\d,]+)\)\]", plan)
+        assert lits, (name, plan)
+        for lit in lits:
+            assert {int(b) for b in lit.split(",")} == want, (name, lit, want)
+
+    def bm25():
+        return bm25_served(spark, path, terms, k=5, n_term_buckets=16)
+
+    bm25().collect()  # first read after the build: the stamp check's reads
+    check("bm25_terms", bm25)
+    check("search", lambda: search_served(spark, path, terms, n_term_buckets=16))
+    check("phrase", lambda: phrase_served(spark, path, terms, n_term_buckets=16))
+    check(
+        "proximity", lambda: proximity_served(spark, path, terms, n_term_buckets=16)
+    )
+    append_postings(
+        spark.createDataFrame([(4, "hash join")], "doc_id long, text string"),
+        path, n_term_buckets=16,
+    )
+    check("bm25_fallback", bm25)
+
+
+@pytest.fixture(scope="module")
+def edge_stores(spark, tmp_path_factory):
+    """Tiny stores for the served readers' degenerate inputs: a
+    one-document store, and a store just after an append (``_terms``
+    deleted). Also returns a word absent from both vocabularies whose
+    bucket directory exists in neither store."""
+    import os
+
+    from bo_sql_spark.operators.search import append_postings, materialize_inverted_index
+
+    root = tmp_path_factory.mktemp("served_edges")
+    one_docs = [(7, "hash join hash join")]
+    base = [(1, "hash join beats sort"), (2, "join hash vector join")]
+    extra = [(3, "sort hash join join hash")]
+    one, grown = str(root / "one"), str(root / "grown")
+    materialize_inverted_index(
+        spark.createDataFrame(one_docs, "doc_id long, text string"), one, n_term_buckets=16
+    )
+    materialize_inverted_index(
+        spark.createDataFrame(base, "doc_id long, text string"), grown, n_term_buckets=16
+    )
+    append_postings(
+        spark.createDataFrame(extra, "doc_id long, text string"), grown, n_term_buckets=16
+    )
+    assert not os.path.exists(grown + "_terms")
+    dirs = set(os.listdir(one)) | set(os.listdir(grown))
+    absent = next(
+        w for w in (f"zz{i}" for i in range(64))
+        if f"tb={_bucket_of(spark, w, 16)}" not in dirs
+    )
+    return {
+        "one": (one, one_docs),
+        "grown": (grown, base + extra),
+        "absent": absent,
+    }
+
+
+def _served_vs_one_shot(spark, edge_stores, served, one_shot, queries):
+    """Each (store, terms) query: the served frame has the one-shot
+    scanner's columns and rows over that store's corpus; a query
+    holding only the absent word is empty."""
+    absent = edge_stores["absent"]
+    for store in ("one", "grown"):
+        path, corpus = edge_stores[store]
+        docs = spark.createDataFrame(corpus, "doc_id long, text string")
+        for terms in [*queries, [absent], [queries[0][0], absent]]:
+            got = served(path, terms)
+            want = one_shot(docs, terms)
+            assert got.columns == want.columns, (store, terms, got.columns)
+            rows = sorted(tuple(r) for r in got.collect())
+            assert rows == sorted(tuple(r) for r in want.collect()), (store, terms, rows)
+            if terms == [absent]:
+                assert rows == [], (store, terms)
+
+
+def test_search_served_degenerate_inputs(spark, edge_stores):
+    from bo_sql_spark.operators.search import doc_terms, search_served
+
+    def served(path, terms):
+        return search_served(spark, path, terms, n_term_buckets=16)
+
+    def one_shot(docs, terms):
+        tf = (
+            doc_terms(docs)
+            .filter(F.col("term").isin(terms))
+            .groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+        )
+        return (
+            tf.groupBy("doc_id")
+            .agg(
+                F.count_distinct("term").cast("long").alias("n_terms_hit"),
+                F.sum("tf").cast("long").alias("tf_sum"),
+            )
+            .filter(F.col("n_terms_hit") == len(set(terms)))
+        )
+
+    _served_vs_one_shot(spark, edge_stores, served, one_shot, [["hash", "join"]])
+    with pytest.raises(ValueError, match="search_served needs at least one term"):
+        search_served(spark, edge_stores["one"][0], [])
+
+
+def test_bm25_served_degenerate_inputs(spark, edge_stores):
+    """Covers both idf paths: the one-document store keeps its
+    ``_terms`` table, the grown store serves from the fallback."""
+    from bo_sql_spark.operators.search import bm25_served, bm25_topk
+
+    def served(path, terms):
+        return bm25_served(spark, path, terms, k=10, n_term_buckets=16)
+
+    def one_shot(docs, terms):
+        return bm25_topk(docs, terms, k=10)
+
+    _served_vs_one_shot(
+        spark, edge_stores, served, one_shot, [["hash", "join"], ["sort"]]
+    )
+    with pytest.raises(ValueError, match="bm25_served needs at least one term"):
+        bm25_served(spark, edge_stores["one"][0], [])
+
+
+def test_phrase_served_degenerate_inputs(spark, edge_stores):
+    from bo_sql_spark.operators.search import phrase_search, phrase_served
+
+    def served(path, terms):
+        return phrase_served(spark, path, terms, n_term_buckets=16)
+
+    _served_vs_one_shot(
+        spark, edge_stores, served, phrase_search, [["hash", "join"], ["join", "join"]]
+    )
+    with pytest.raises(ValueError, match="phrase_served needs a non-empty phrase"):
+        phrase_served(spark, edge_stores["one"][0], [])
+
+
+def test_proximity_served_degenerate_inputs(spark, edge_stores):
+    from bo_sql_spark.operators.search import proximity_search, proximity_served
+
+    def served(path, terms):
+        return proximity_served(spark, path, terms, window=3, n_term_buckets=16)
+
+    def one_shot(docs, terms):
+        return proximity_search(docs, terms, window=3)
+
+    _served_vs_one_shot(
+        spark, edge_stores, served, one_shot, [["hash", "join"], ["sort", "hash"]]
+    )
+    with pytest.raises(ValueError, match="proximity_served needs at least one term"):
+        proximity_served(spark, edge_stores["one"][0], [])
+
+
 def test_ivf_snapshot_swap_prunes_and_time_travels(spark, tmp_path):
     """The versioned IVF index (store_ivf_model_swap's mechanism):
     a (kind, cell)-partitioned snapshot version must serve through
