@@ -2,7 +2,11 @@
 
 Replaces the reference's ``Catalog`` (reference include/catalog/catalog.h:16-62):
 name -> table registration plus per-column statistics. In Spark the
-catalog is the session catalog; statistics come from an aggregate query
+catalog is the session catalog. Like the reference, which learns each
+table's schema as it loads it, registration reads every table's schema
+from its parquet footer on the driver (``sources.parquet_source``), so
+opening the catalog fires no Spark job. Statistics come from an
+aggregate query
 (the reference computes min/max/NDV at CSV load time,
 src/storage/csv_loader.cpp:73-159 — we compute them on demand, and on a
 cluster you'd persist them with ANALYZE TABLE for CBO).
@@ -10,6 +14,9 @@ cluster you'd persist them with ANALYZE TABLE for CBO).
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import functools
 import os
 import weakref
 from dataclasses import dataclass
@@ -34,7 +41,8 @@ TABLES = (
 
 
 # Most recently registered sf_dir + its DataFrames, per live session; avoids
-# re-reading 10 parquet footers on every query when the same directory is
+# re-listing the directory, re-reading 10 parquet footers on the driver and
+# re-opening 10 DataFrames on every query when the same directory is
 # queried repeatedly (the common case for the REPL, bench, and the driver).
 # Keyed by a WEAK reference to the session: id() reuse after a stopped
 # session is garbage-collected could otherwise hand a new session cached
@@ -57,19 +65,11 @@ def _purge_stopped_sessions() -> None:
             del _registered[s]
 
 
-def _ship_package_to_workers(spark: SparkSession) -> None:
-    """Make ``bo_sql_spark`` importable on Python WORKERS regardless of
-    how the driver found it. mapInPandas/pandas_udf closures reference
-    module-level functions (WAV/PNG codecs, MG summaries); cloudpickle
-    serializes those BY REFERENCE, so the worker must `import
-    bo_sql_spark...` itself — and workers inherit neither the driver's
-    sys.path edits nor post-JVM-start os.environ changes (the JVM
-    captured its env at launch). addPyFile is the mechanism that works
-    everywhere (local threads, real executors): zip the package once
-    per session and ship it; workers prepend the zip to their
-    sys.path. ~100KB, once."""
-    if getattr(spark, "_bosql_pkg_shipped", False):
-        return
+@functools.cache
+def _package_zip() -> str:
+    """Zip of the ``bo_sql_spark`` sources, built once per process and
+    deleted at interpreter exit. Every session of the process ships the
+    same file."""
     import tempfile
     import zipfile
 
@@ -78,6 +78,7 @@ def _ship_package_to_workers(spark: SparkSession) -> None:
     pkg_dir = os.path.dirname(os.path.abspath(bo_sql_spark.__file__))
     fd, zpath = tempfile.mkstemp(prefix="bo_sql_spark_pkg_", suffix=".zip")
     os.close(fd)
+    atexit.register(_remove_quietly, zpath)
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
@@ -90,7 +91,28 @@ def _ship_package_to_workers(spark: SparkSession) -> None:
                     "bo_sql_spark", os.path.relpath(full, pkg_dir)
                 )
                 zf.write(full, rel)
-    spark.sparkContext.addPyFile(zpath)
+    return zpath
+
+
+def _remove_quietly(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
+
+
+def _ship_package_to_workers(spark: SparkSession) -> None:
+    """Make ``bo_sql_spark`` importable on Python WORKERS regardless of
+    how the driver found it. mapInPandas/pandas_udf closures reference
+    module-level functions (WAV/PNG codecs, MG summaries); cloudpickle
+    serializes those BY REFERENCE, so the worker must `import
+    bo_sql_spark...` itself — and workers inherit neither the driver's
+    sys.path edits nor post-JVM-start os.environ changes (the JVM
+    captured its env at launch). addPyFile is the mechanism that works
+    everywhere (local threads, real executors): ship the package zip
+    (``_package_zip``, ~100KB, built once per process) to each session;
+    workers prepend it to their sys.path."""
+    if getattr(spark, "_bosql_pkg_shipped", False):
+        return
+    spark.sparkContext.addPyFile(_package_zip())
     spark._bosql_pkg_shipped = True
 
 
@@ -100,6 +122,15 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     Parquet scans are the scale path: columnar, predicate-pushdown and
     column-pruning friendly. At 100 TB these would be partitioned
     directories behind the same names; nothing downstream changes.
+
+    Opening fires no Spark job: one Hadoop FS listing of ``sf_dir``
+    finds the present tables (sf_dir can be any Spark-visible URI:
+    file://, hdfs://, s3a://), their footers are read on the driver,
+    and each file table opens with its footer's schema
+    (``sources.parquet_source.open_parquet``). A table stored as a
+    directory keeps Spark's inference for partition discovery. A
+    missing table is skipped.
+
     Memoized per (session, dir): temp views are session-global state, so
     only re-registration on a *different* directory is needed.
     """
@@ -110,29 +141,28 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     _ship_package_to_workers(spark)
     # events.parquet uses TIMESTAMP(NANOS), unrepresentable in Spark; read
     # the raw int64 nanos (runtime conf — the caller's session may not have
-    # it, e.g. the driver's own plain SparkSession) and fix up below.
+    # it, e.g. the driver's own plain SparkSession) and fix up below. Set
+    # before the footers are read: the schema converter follows it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # unix_timestamp()/date functions are session-TZ-dependent; the oracle
     # (DuckDB) is UTC-naive. Pin UTC here too, not just in our session
     # factory, so a caller-provided session gets identical semantics.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    out: dict[str, DataFrame] = {}
-    # Existence through the Hadoop FS API: sf_dir can be a non-local URI
-    # (hdfs://, s3a://) — os.path.exists would silently skip every table.
-    # Local paths take the cheap os.path fast path.
     from bo_sql_spark import fsutil
+    from bo_sql_spark.sources.parquet_source import open_parquet
 
-    local = "://" not in sf_dir or sf_dir.startswith("file://")
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        present = (
-            os.path.exists(path.removeprefix("file://"))
-            if local
-            else fsutil.exists(spark, path)
-        )
-        if not present:
-            continue
-        df = spark.read.parquet(path)
+    listing = fsutil.list_status(spark, sf_dir)
+    paths = {
+        name: os.path.join(sf_dir, f"{name}.parquet")
+        for name in TABLES
+        if f"{name}.parquet" in listing
+    }
+    frames = open_parquet(
+        spark, {path: listing[f"{name}.parquet"] for name, path in paths.items()}
+    )
+    out: dict[str, DataFrame] = {}
+    for name, path in paths.items():
+        df = frames[path]
         if name == "events":
             df = normalize_events(df)
         df.createOrReplaceTempView(name)

@@ -33,15 +33,22 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def list_status(spark: SparkSession, path: str) -> dict:
+    """name -> Hadoop ``FileStatus`` of each direct child of ``path``,
+    from one listing. Missing path => empty dict, same as an empty
+    store."""
+    fs, hpath = _fs_and_path(spark, path)
+    if not fs.exists(hpath):
+        return {}
+    return {st.getPath().getName(): st for st in fs.listStatus(hpath)}
+
+
 def ls(spark: SparkSession, path: str) -> list[tuple[str, str]]:
     """(name, full_path) for each direct child of ``path``. Missing
     path => empty list, same as an empty store."""
-    fs, hpath = _fs_and_path(spark, path)
-    if not fs.exists(hpath):
-        return []
     return [
-        (st.getPath().getName(), st.getPath().toString())
-        for st in fs.listStatus(hpath)
+        (name, st.getPath().toString())
+        for name, st in list_status(spark, path).items()
     ]
 
 
