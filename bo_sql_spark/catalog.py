@@ -129,7 +129,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     and each file table opens with its footer's schema
     (``sources.parquet_source.open_parquet``). A table stored as a
     directory keeps Spark's inference for partition discovery. A
-    missing table is skipped.
+    missing table is skipped, and the view the previous directory
+    registered under its name is dropped; views registered by other
+    means (``LOAD TABLE``) stay.
 
     Memoized per (session, dir): temp views are session-global state, so
     only re-registration on a *different* directory is needed.
@@ -157,6 +159,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         for name in TABLES
         if f"{name}.parquet" in listing
     }
+    if cached is not None:
+        for name in cached[1].keys() - paths.keys():
+            spark.catalog.dropTempView(name)
     frames = open_parquet(
         spark, {path: listing[f"{name}.parquet"] for name, path in paths.items()}
     )

@@ -4,9 +4,9 @@ Semantics: for each left row, attach the single most recent right row
 with right.ts <= left.ts within the same key (DuckDB's ASOF JOIN, pandas
 merge_asof, kdb aj).
 
-Two strategies, one interface:
+Two plans, one interface, picked by ``direction``:
 
-- ``window`` (default): the union trick, pure DataFrame ops. Tag both
+- ``window`` (backward/forward): the union trick, pure DataFrame ops. Tag both
   sides, union on (key, ts), then ``last(<right struct>, ignorenulls)``
   over (PARTITION BY key ORDER BY ts, side ROWS UNBOUNDED PRECEDING)
   fills every left row with the latest preceding right row; filter back
@@ -14,15 +14,15 @@ Two strategies, one interface:
   this is strictly better than any Python path, and it's immune to the
   many-small-groups overhead that makes cogrouped Pandas slow (each
   group pays ~ms of pandas setup; a billion keys = hours of overhead).
-- ``cogroup``: cogrouped ``applyInPandas`` + ``pd.merge_asof`` per key
-  (kept for parity/verification and for semantics the window rewrite
-  doesn't cover, e.g. ``direction='nearest'``).
+- ``cogroup`` (nearest): cogrouped ``applyInPandas`` +
+  ``pd.merge_asof`` per key, for the semantics the window rewrite
+  doesn't cover; the tests also use it as the window plan's reference.
 
 Right-row payloads ride in ONE struct so ``last(..., ignorenulls)``
 can't mix columns from different right rows when a payload field is
 legitimately NULL.
 
-Skewed keys: either strategy puts one key in one task — salt by coarse
+Skewed keys: either plan puts one key in one task — salt by coarse
 time bucket if a single key exceeds memory (bucket boundaries then need
 a one-bucket lookback pass).
 """
@@ -42,7 +42,6 @@ def asof_join(
     right_cols: list[str] | None = None,
     tolerance: int | None = None,
     direction: str = "backward",
-    strategy: str = "window",
 ) -> DataFrame:
     """As-of join: left rows + most recent right row per key.
 
@@ -50,10 +49,11 @@ def asof_join(
     (use int64 epoch nanos for timestamps — exact, no unit drift);
     ``by`` is the equality key. Right columns are suffixed ``_right``
     if they collide. ``direction`` is 'backward' (right.on <= left.on)
-    or 'forward' (right.on >= left.on); ``tolerance`` bounds
+    or 'forward' (right.on >= left.on), both planned as the window
+    rewrite, or 'nearest' (cogroup); ``tolerance`` bounds
     |left.on - right.on|.
     """
-    if strategy == "window" and direction in ("backward", "forward"):
+    if direction in ("backward", "forward"):
         return _asof_window(left, right, on, by, right_cols, tolerance, direction)
     return _asof_cogroup(left, right, on, by, right_cols, tolerance, direction)
 

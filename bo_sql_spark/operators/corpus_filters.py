@@ -54,26 +54,14 @@ def _toks(text_col: str) -> Column:
     return F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
 
 
-def word_ngrams_all(toks: Column, n: int) -> Column:
-    """ALL n-grams of a token array, multiplicity preserved (repetition
-    measurement needs duplicates — contrast ``word_shingles``, which
-    dedups for MinHash). Documents with < n tokens yield []."""
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(cnt - n + 1, F.lit(1)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
-    return F.when(cnt >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
 def _dup_ngram_frac_udf(n: int):
     """Arrow-vectorized duplicate-n-gram fraction over a TOKEN ARRAY
     column (the tokens themselves are still computed by the engine, so
     there is zero tokenizer-replication risk): returns the UNROUNDED
     1 - distinct/total double — the caller applies the engine's own
-    F.round, keeping the rounding rule engine-side. Replaces the
-    per-gram interpreted transform(concat_ws(slice(...))) chain of
-    word_ngrams_all, which is CodegenFallback and dominated
-    text_gopher_filter / text_repetition_signals (~22s each at sf0.1
-    for 5,000 docs)."""
+    F.round, keeping the rounding rule engine-side. N-grams keep their
+    multiplicity (repetition measurement needs duplicates — contrast
+    ``word_shingles``, which dedups for MinHash)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -81,7 +69,7 @@ def _dup_ngram_frac_udf(n: int):
         out = np.zeros(len(toks), dtype=np.float64)
         for j, tk in enumerate(toks):
             if tk is None:
-                continue  # NULL token array => 0.0, same as the hof form
+                continue  # NULL token array => 0.0
             t = list(tk)
             cnt = len(t)
             if cnt >= n:
@@ -92,25 +80,13 @@ def _dup_ngram_frac_udf(n: int):
     return frac
 
 
-def dup_ngram_frac(toks: Column, n: int, impl: str = "arrow") -> Column:
+def dup_ngram_frac(toks: Column, n: int) -> Column:
     """Fraction of n-gram OCCURRENCES that are repeats of an earlier
-    occurrence: 1 - distinct/total. 0.0 for docs with < n tokens.
-    impl='arrow' (default) computes the unrounded fraction in one
-    Arrow batch stage (bit-identical: same integer counts, same
-    double division, and the ROUND still runs engine-side);
-    impl='hof' keeps the pure-expression form."""
-    if impl == "arrow":
-        raw = _dup_ngram_frac_udf(n)(toks)
-        return F.round(raw, 6)
-    grams = word_ngrams_all(toks, n)
-    total = F.size(grams)
-    return F.when(
-        total > 0,
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct(grams)).cast("double") / total,
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
+    occurrence: 1 - distinct/total. 0.0 for docs with < n tokens. The
+    unrounded fraction comes from one Arrow batch stage (exact integer
+    counts, one double division); the ROUND runs engine-side."""
+    raw = _dup_ngram_frac_udf(n)(toks)
+    return F.round(raw, 6)
 
 
 def gopher_keep(

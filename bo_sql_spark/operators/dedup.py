@@ -24,7 +24,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from bo_sql_spark.functions import cosine_similarity, word_shingles
+from bo_sql_spark.functions import word_shingles
 from bo_sql_spark.parallel import lineage_cut, spread_scan
 
 
@@ -561,7 +561,6 @@ _SIMHASH_P_BITS = 60  # md5-15-hex == 60 bits; fits signed int64 headroom
 
 def simhash_portable(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    impl: str = "wide",
 ) -> DataFrame:
     """60-bit ENGINE-PORTABLE SimHash per document — simhash64's
     oracle-checkable twin (same pattern as minhash_signatures_portable:
@@ -578,25 +577,9 @@ def simhash_portable(
     would otherwise shift every empty doc to the same non-zero
     signature).
 
-    impl='narrow' folds the bit sums LONG-GRAIN on (id, j) rows —
-    explode j in 0..59 per token, sum the ±1 signs per (id, j), then
-    pack sum(1<<j where sum>0) per id. Identical integer sums
-    (commutative ±1 additions; OR of distinct single-bit values ==
-    their sum). It was built on the drift_embedding_centroid
-    hypothesis that the wide form's whole-stage-codegen compile (60
-    conditional sum-aggregates + a 60-term OR chain) is the fixture
-    wall — but the interleaved sf0.1 noop A/B read narrow/wide =
-    1.05x (OPTIMIZATION_r14.md, reopen session): unlike the
-    centroid's 64 DECIMAL(38) aggregates, 60 plain long sums compile
-    cheaply, and narrow pays a 60x row expansion through the explode
-    plus a second exchange. impl stays 'wide' (the measured winner
-    and the better 100 TB shape: state = 60 longs per doc, no row
-    blowup); 'narrow' is kept for the A/B record, bit-equality pinned
-    in tests/test_r14_opt.py.
+    The bit sums fold WIDE: one row of 60 long sums per doc (state =
+    60 longs per doc, no row blowup — the better 100 TB shape).
     """
-    if impl not in ("wide", "narrow"):  # r15 (ADVICE): a typo must not
-        # silently fall through to the measured-slower narrow path
-        raise ValueError(f"impl must be 'wide' or 'narrow', got {impl!r}")
     # r15: the r14 spread_scan here was RETRACTED — fresh-session
     # interleaved pairs on dedup_simhash_portable read spread/no-spread
     # = 0.81x/0.77x/0.96x (sf0.1, noop): one md5 per distinct token is
@@ -616,50 +599,29 @@ def simhash_portable(
             F.expr("CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)"),
         )
     )
-    if impl == "wide":
-        # r15-opt: branch-free aggregate state. The ±1 sign fold
-        # sum(when(bit,1).otherwise(-1)) = 2*sum(bit) - n, so bit j of
-        # the signature is set iff 2*s_j > n where s_j is the PLAIN sum
-        # of ((h >> j) & 1) — 60 unconditional long sums + one count
-        # replace 60 conditional sums (same exact integers, same
-        # signature bit-for-bit; pinned against the ±1 form in
-        # tests/test_r14_opt.py).
-        bit_sums = exploded.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[
-                F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1))).alias(
-                    f"b{j}"
-                )
-                for j in range(_SIMHASH_P_BITS)
-            ],
-        )
-        sig = None
-        for j in range(_SIMHASH_P_BITS):
-            bit = F.when(
-                F.col(f"b{j}") * 2 > F.col("_n"), F.lit(1 << j)
-            ).otherwise(F.lit(0))
-            sig = bit if sig is None else sig.bitwiseOR(bit)
-        return bit_sums.select(F.col(id_col), sig.alias("simhash"))
-    longg = exploded.select(
-        F.col(id_col),
-        "h",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(_SIMHASH_P_BITS - 1))
-        ).alias("j"),
+    # r15-opt: branch-free aggregate state. The ±1 sign fold
+    # sum(when(bit,1).otherwise(-1)) = 2*sum(bit) - n, so bit j of
+    # the signature is set iff 2*s_j > n where s_j is the PLAIN sum
+    # of ((h >> j) & 1) — 60 unconditional long sums + one count
+    # replace 60 conditional sums (same exact integers, same
+    # signature bit-for-bit; pinned against a pure-Python md5 ±1
+    # replay in tests/test_r14_opt.py).
+    bit_sums = exploded.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("_n"),
+        *[
+            F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1))).alias(
+                f"b{j}"
+            )
+            for j in range(_SIMHASH_P_BITS)
+        ],
     )
-    bsum = longg.groupBy(id_col, "j").agg(
-        F.sum(
-            F.when(F.expr("(shiftright(h, j) & 1) = 1"), 1).otherwise(-1)
-        ).alias("bsum")
-    )
-    return bsum.groupBy(id_col).agg(
-        F.sum(
-            F.when(
-                F.col("bsum") > 0,
-                F.expr("shiftleft(CAST(1 AS BIGINT), j)"),
-            ).otherwise(F.lit(0))
-        ).alias("simhash")
-    )
+    sig = None
+    for j in range(_SIMHASH_P_BITS):
+        bit = F.when(
+            F.col(f"b{j}") * 2 > F.col("_n"), F.lit(1 << j)
+        ).otherwise(F.lit(0))
+        sig = bit if sig is None else sig.bitwiseOR(bit)
+    return bit_sums.select(F.col(id_col), sig.alias("simhash"))
 
 
 def simhash_near_dup_pairs_portable(
@@ -750,7 +712,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    unroll: int = 1,
 ) -> DataFrame:
     """(node, cluster_id=min reachable node) over an undirected pair set.
 
@@ -778,24 +739,14 @@ def connected_components(
     two join subtrees that otherwise run in parallel). Stale parents
     keep O(log diameter): reach per round is 2r+1 vs fresh 2r+2.
     Fixpoint unchanged in all variants: labels only ever decrease and
-    the loop exits on propagation stability == component minima. At 100 TB the edge list is the candidate pair set (small),
-    not the corpus; both joins shuffle on node id.
+    the loop exits on propagation stability == component minima. At
+    100 TB the edge list is the candidate pair set (small), not the
+    corpus; both joins shuffle on node id.
 
-    Driver loop with a convergence check; ``max_iter`` bounds rounds
-    (log2(longest path) + ~3 suffices with doubling).
-
-    ``unroll`` composes that many propagation+shortcut rounds into ONE
-    plan per checkpoint/probe — fewer driver round-trips and global
-    barriers for DEEP graphs (paths: 18 probes -> 9 at unroll=2), at
-    the cost of a proportionally deeper plan per checkpoint. Default 1:
-    dedup graphs are near-cliques converging in ~2 rounds, where the
-    measured r14 A/B showed unroll=2 LOSES (the convergence probe only
-    fires every ``unroll`` rounds, so the final no-op verification
-    pass runs unroll-deep: 2.5s -> 3.8s on the e2e_v2 pair graph).
-    Extra rounds past the fixpoint are no-ops (labels only ever
-    decrease), so results are identical for any unroll; rounds are
-    still COUNTED individually against max_iter and reported via
-    ``last_rounds``.
+    Driver loop with a convergence check: one propagation + shortcut
+    round per checkpoint/probe. ``max_iter`` bounds rounds
+    (log2(longest path) + ~3 suffices with doubling); the count is
+    reported via ``last_rounds``.
     """
     # cut the edge list's lineage: it is consumed EVERY round (plus
     # the label init), and its lineage is the caller's whole
@@ -827,58 +778,50 @@ def connected_components(
     prev_sum = None
     rounds = 0
     while rounds < max_iter:
-        new_labels = labels
-        for _ in range(min(max(1, unroll), max_iter - rounds)):
-            rounds += 1
-            prev = new_labels
-            neighbor_min = (
-                edges.join(prev, edges.dst == prev.node)
-                .groupBy("src")
-                .agg(F.min("label").alias("nbr_label"))
+        rounds += 1
+        neighbor_min = (
+            edges.join(labels, edges.dst == labels.node)
+            .groupBy("src")
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        prop = (
+            labels.join(
+                neighbor_min, labels.node == neighbor_min.src, "left"
             )
-            prop = (
-                prev.join(
-                    neighbor_min, prev.node == neighbor_min.src, "left"
-                )
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("nbr_label"), F.col("label")),
-                    ).alias("label"),
-                )
+            .select(
+                "node",
+                F.least(
+                    F.col("label"),
+                    F.coalesce(F.col("nbr_label"), F.col("label")),
+                ).alias("label"),
             )
-            # pointer doubling: label(v) <- label(label(v)). Labels are
-            # always node ids and only ever decrease, so the lookup
-            # hits. Round 1 shortcuts against the FRESH propagation
-            # result (required: the round-start table is the identity
-            # there, a stale shortcut would be a no-op and diameter-2
-            # graphs would pay a whole extra round — measured 0.83x on
-            # dedup_survivors); later rounds shortcut against the
-            # ROUND-START checkpointed table, which plans as a cheap
-            # RDD scan instead of duplicating the propagation subtree
-            # on the second join side (see docstring). That holds for
-            # unroll == 1 only: inside an unrolled block, rounds >= 2
-            # shortcut against the previous IN-BLOCK result, which is
-            # not checkpointed, so its whole subtree is planned again
-            # on the second join side (a plan-size cost, not a result
-            # change: labels are identical for any unroll).
-            p_src = prop if rounds == 1 else prev
-            parents = p_src.select(
-                F.col("node").alias("p_node"), F.col("label").alias("p_label")
+        )
+        # pointer doubling: label(v) <- label(label(v)). Labels are
+        # always node ids and only ever decrease, so the lookup hits.
+        # Round 1 shortcuts against the FRESH propagation result
+        # (required: the round-start table is the identity there, a
+        # stale shortcut would be a no-op and diameter-2 graphs would
+        # pay a whole extra round — measured 0.83x on
+        # dedup_survivors); later rounds shortcut against the
+        # ROUND-START checkpointed table, which plans as a cheap RDD
+        # scan instead of duplicating the propagation subtree on the
+        # second join side (see docstring).
+        p_src = prop if rounds == 1 else labels
+        parents = p_src.select(
+            F.col("node").alias("p_node"), F.col("label").alias("p_label")
+        )
+        new_labels = (
+            prop.join(
+                parents, prop.label == parents.p_node, "left",
             )
-            new_labels = (
-                prop.join(
-                    parents, prop.label == parents.p_node, "left",
-                )
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("p_label"), F.col("label")),
-                    ).alias("label"),
-                )
+            .select(
+                "node",
+                F.least(
+                    F.col("label"),
+                    F.coalesce(F.col("p_label"), F.col("label")),
+                ).alias("label"),
             )
+        )
         # lineage cut per round. LAZY: the logical plan is replaced by
         # the checkpoint RDD immediately, and the RDD materializes
         # INSIDE the convergence-probe job below — one Spark job per
@@ -900,11 +843,10 @@ QUADRATIC_ROW_CAP = 10_000
 
 def _float_pair_cos_udf():
     """Arrow-vectorized cosine over candidate PAIRS of double vectors,
-    replaying the expression form's float-op sequence exactly:
-    products in double, SEQUENTIAL accumulation (np.cumsum — one
-    addend at a time, the fold order of aggregate(zip_with) and
-    DuckDB's list_dot_product; np.sum's pairwise summation rounds
-    differently), then dot / (sqrt(aa) * sqrt(bb))."""
+    replaying the DuckDB oracle's float-op sequence exactly: products
+    in double, SEQUENTIAL accumulation (np.cumsum — one addend at a
+    time, the fold order of list_dot_product; np.sum's pairwise
+    summation rounds differently), then dot / (sqrt(aa) * sqrt(bb))."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -927,7 +869,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     allow_quadratic: bool = False,
-    impl: str = "arrow",
 ) -> DataFrame:
     """All pairs with cosine similarity >= threshold (brute force).
 
@@ -943,10 +884,8 @@ def embedding_near_dup_pairs(
     The probe stops scanning after cap+1 rows, so the guard's cost is
     O(cap) regardless of corpus size.
 
-    impl='arrow' (default) scores the joined pairs with one
-    Arrow-batched sequential-order NumPy cosine per batch
-    (bit-identical to the interpreted HOF column form, which remains
-    behind impl='hof'; unit-pinned)."""
+    The joined pairs are scored with one Arrow-batched sequential-order
+    NumPy cosine per batch (_float_pair_cos_udf)."""
     if not allow_quadratic:
         over = emb.select(id_col).limit(QUADRATIC_ROW_CAP + 1).count()
         if over > QUADRATIC_ROW_CAP:
@@ -964,10 +903,7 @@ def embedding_near_dup_pairs(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).cast("array<double>").alias("vb"),
     )
-    if impl == "arrow":
-        cos = _float_pair_cos_udf()(F.col("va"), F.col("vb"))
-    else:
-        cos = cosine_similarity(F.col("va"), F.col("vb"))
+    cos = _float_pair_cos_udf()(F.col("va"), F.col("vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cos", cos)
@@ -1169,10 +1105,9 @@ def contamination_ratio(
 # ------------------------------------------------------------- SemDeDup
 def _pair_dot_udf():
     """Arrow-vectorized exact dot over candidate PAIRS: products in
-    double, SEQUENTIAL accumulation (np.cumsum — the fold order of the
-    HOF aggregate and DuckDB's list_dot_product). The division by the
-    precomputed norms stays engine-side, so only the dot moves off the
-    interpreted path."""
+    double, SEQUENTIAL accumulation (np.cumsum — the fold order of
+    DuckDB's list_dot_product, which the oracles replay). The division
+    by the precomputed norms stays engine-side."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -1184,18 +1119,6 @@ def _pair_dot_udf():
         return pd.Series(np.cumsum(a * b, axis=1)[:, -1])
 
     return pdot
-
-
-def _pair_dot(a, b, impl: str = "arrow"):
-    """dot(a, b) for pair-join verifies: impl='arrow' (default) is the
-    sequential-order NumPy form; impl='hof' the interpreted column
-    form (kept for A/B; bit-identical, pinned by the semantic-dedup
-    oracles and test_semantic_pair_dot_arrow_hof_identical)."""
-    from bo_sql_spark.functions import dot
-
-    if impl == "arrow":
-        return _pair_dot_udf()(a, b)
-    return dot(a, b)
 
 
 def _with_norms(
@@ -1235,7 +1158,8 @@ def _pairwise_dup_ids(
         hi.join(lo, "cell")
         .filter(F.col("_ida") > F.col("_idb"))
         .filter(
-            _pair_dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+            _pair_dot_udf()(F.col("_va"), F.col("_vb"))
+            / (F.col("_na") * F.col("_nb"))
             >= threshold
         )
         .select(F.col("_ida").alias(id_col))
@@ -1329,7 +1253,7 @@ def semantic_pair_cosines(
             "ida",
             "idb",
             (
-                _pair_dot(F.col("_va"), F.col("_vb"))
+                _pair_dot_udf()(F.col("_va"), F.col("_vb"))
                 / (F.col("_na") * F.col("_nb"))
             ).alias("cos"),
         )
@@ -1393,7 +1317,7 @@ def semantic_dedup_incremental(
             F.col(vec_col).alias("_vc"),
             l2_norm(F.col(vec_col)).alias("_nc"),
         )
-        sim_corpus = _pair_dot(F.col(vec_col), F.col("_vc")) / (
+        sim_corpus = _pair_dot_udf()(F.col(vec_col), F.col("_vc")) / (
             F.col("_n") * F.col("_nc")
         )
         cross = (

@@ -602,7 +602,6 @@ def embedding_centroid_drift(
     group_col: str,
     vec_col: str = "embedding",
     dims: int = 64,
-    impl: str = "narrow",
 ) -> DataFrame:
     """Embedding-SPACE drift: per-group centroid direction vs the
     global centroid — (group, n_vectors, cos_to_global). The
@@ -628,21 +627,16 @@ def embedding_centroid_drift(
     corpus pass) broadcast back — per-group state is dims numbers,
     like every mergeable monitor in this family.
 
-    impl='narrow' (r14-opt default) keys the component sums LONG-GRAIN
-    on (grp, d) via posexplode instead of dims wide sum columns: the
-    values are the identical exact decimals (commutative integer
-    sums), but every expression stays a handful of terms, where the
-    wide form's 64 decimal aggregates + 192-term dot projection made
-    whole-stage-codegen COMPILE the fixture wall (the plan constant is
-    invariant in rows — the r13 'fold constant' — because it is paid
-    at plan build, guide §7.3). impl='wide' keeps the r13 shape for
-    the measured A/B; bit-equality pinned in tests.
+    The component sums are keyed LONG-GRAIN on (grp, d) via
+    posexplode instead of dims wide sum columns: the values are the
+    identical exact decimals (commutative integer sums), but every
+    expression stays a handful of terms, where a wide form's 64
+    decimal aggregates + 192-term dot projection make whole-stage-
+    codegen COMPILE the fixture wall (the plan constant is invariant
+    in rows because it is paid at plan build, guide §7.3). The wide
+    shape survives as embedding_group_sums + centroid_cosines_from_sums
+    (the mergeable-summary path), bit-equality pinned in tests.
     """
-    if impl == "wide":
-        per_group = embedding_group_sums(emb, group_col, vec_col, dims)
-        return centroid_cosines_from_sums(per_group, dims).withColumnRenamed(
-            "grp", group_col
-        )
     from bo_sql_spark.operators.similarity import quantize_vec
 
     dec = "decimal(38,0)"

@@ -387,32 +387,6 @@ def quantize_vec(vec_col: Column | str, scale: int = _RP_SCALE) -> Column:
     )
 
 
-def _rp_bucket(qv: Column, masks_row: list[int], dims: int) -> Column:
-    """Bucket id from one seed's sign masks over a quantized vector —
-    len(masks_row) sign bits, each the sign of an exact integer sum.
-
-    HOF (interpreted) form, kept for the A/B against the Arrow path:
-    aggregate/zip_with are CodegenFallback, ~bits x dims lambda evals
-    per row (the r12 verdict's #3 — the dominant wall in the portable
-    similarity queries)."""
-    bucket = F.lit(0)
-    for p, m in enumerate(masks_row):
-        proj = F.aggregate(
-            F.zip_with(
-                qv,
-                F.array(*[
-                    F.lit(1 if (m >> d) & 1 else -1).cast("long")
-                    for d in range(dims)
-                ]),
-                lambda x, s: x * s,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket.cast("long")
-
-
 def _masks_matrix(masks: list[list[int]], dims: int) -> "np.ndarray":
     """(seeds, bits, dims) +-1 int64 matrix form of rp_sign_masks."""
     seeds, bits = len(masks), len(masks[0])
@@ -458,39 +432,21 @@ def _stack_rp_buckets(
     masks: list[list[int]],
     dims: int,
     carry_cols: list[str],
-    impl: str = "arrow",
 ) -> DataFrame:
-    """(carry_cols..., seed, bucket) — one row per (input row, seed).
-
-    impl='arrow': one vectorized pandas_udf + posexplode (default).
-    impl='hof':   per-seed interpreted expression columns + unionAll
-                  (the r12 shape, kept for the measured A/B).
-    Both produce identical rows — asserted by a unit test."""
-    if impl == "arrow":
-        udf = _rp_buckets_udf(masks, dims)
-        return q.select(
-            *carry_cols, F.posexplode(udf(F.col("qv"))).alias("seed", "bucket")
-        ).select(*carry_cols, F.col("seed").cast("int").alias("seed"), "bucket")
-    parts = [
-        q.select(
-            *carry_cols,
-            F.lit(s).cast("int").alias("seed"),
-            _rp_bucket(F.col("qv"), masks[s], dims).alias("bucket"),
-        )
-        for s in range(len(masks))
-    ]
-    stacked = parts[0]
-    for p in parts[1:]:
-        stacked = stacked.unionAll(p)
-    return stacked
+    """(carry_cols..., seed, bucket) — one row per (input row, seed):
+    one vectorized pandas_udf + posexplode."""
+    udf = _rp_buckets_udf(masks, dims)
+    return q.select(
+        *carry_cols, F.posexplode(udf(F.col("qv"))).alias("seed", "bucket")
+    ).select(*carry_cols, F.col("seed").cast("int").alias("seed"), "bucket")
 
 
 def _quantized_pair_cos_udf():
     """Arrow-vectorized exact-integer cosine for candidate-pair verify:
     int64 elementwise dot (exact, < 2^53), then the SAME double
     expression shape the SQL oracle computes — dot / (sqrt(aa) *
-    sqrt(bb)) — so results are bit-identical to both the HOF column
-    form and DuckDB's list_dot_product replay."""
+    sqrt(bb)) — so results are bit-identical to DuckDB's
+    list_dot_product replay."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -515,7 +471,6 @@ def approx_similarity_join_portable(
     vec_col: str = "embedding",
     bits: int | None = None,
     seeds: int | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """approx_similarity_join's ENGINE-PORTABLE self-join twin:
     (id_a, id_b, cos_sim) for every pair LSH surfaces with quantized
@@ -537,11 +492,9 @@ def approx_similarity_join_portable(
     The count is one parquet-metadata-cheap job; at 100 TB the rule
     reads the table's row count, never the data.
 
-    impl='arrow' (default) computes bucket signs and the verify cosine
-    as Arrow-vectorized NumPy int64 matrix ops — exact integers, bit-
-    identical to the interpreted HOF form (impl='hof', kept for the
-    measured A/B; the r12 verdict's #3: aggregate/zip_with are
-    CodegenFallback and dominated these queries' wall time).
+    Bucket signs and the verify cosine are Arrow-vectorized NumPy int64
+    matrix ops — exact integers, so the candidate set and the scores
+    match the SQL oracle's list_dot_product replay bit-for-bit.
     """
     if bits is None or seeds is None:
         auto_bits, auto_seeds = rp_auto_join_params(emb.count())
@@ -561,7 +514,7 @@ def approx_similarity_join_portable(
     ).filter(F.exists("qv", lambda x: x != 0))
     # r14-opt: the bucketed table feeds both sides of the self-join —
     # cut the lineage so quantize + the Arrow bucket matmul run once
-    stacked = lineage_cut(_stack_rp_buckets(q, masks, dim, [id_col, "qv"], impl))
+    stacked = lineage_cut(_stack_rp_buckets(q, masks, dim, [id_col, "qv"]))
     a = stacked.alias("a")
     b = stacked.alias("b")
     cands = (
@@ -579,18 +532,7 @@ def approx_similarity_join_portable(
         )
         .distinct()
     )
-    if impl == "arrow":
-        cos = _quantized_pair_cos_udf()(F.col("qa"), F.col("qb"))
-    else:
-        dot = lambda x, y: F.aggregate(  # noqa: E731 — exact int64 dot
-            F.zip_with(F.col(x), F.col(y), lambda u, v: u * v),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        cos = dot("qa", "qb").cast("double") / (
-            F.sqrt(dot("qa", "qa").cast("double"))
-            * F.sqrt(dot("qb", "qb").cast("double"))
-        )
+    cos = _quantized_pair_cos_udf()(F.col("qa"), F.col("qb"))
     return (
         cands.withColumn("cos", cos)
         .filter(F.col("cos") >= threshold)
@@ -616,7 +558,7 @@ def rp_bucket_histogram(
     q = emb.select(quantize_vec(vec_col).alias("qv")).filter(
         F.exists("qv", lambda x: x != 0)
     )
-    stacked = _stack_rp_buckets(q, masks, dim, [], impl="arrow").select(
+    stacked = _stack_rp_buckets(q, masks, dim, []).select(
         F.col("seed").cast("long").alias("seed"), "bucket"
     )
     return stacked.groupBy("seed", "bucket").agg(
@@ -663,13 +605,12 @@ def ann_lsh_candidates(
     seeds: int | None = None,
     flips: int | None = None,
     radius: int | None = None,
-    impl: str = "arrow",
 ) -> tuple[list[int], DataFrame]:
     """(quantized query, candidate (id, qv) rows) — the shared probe
     stage of ann_topk_lsh_portable and the scan-fraction canary: the
     query's probe buckets (rp_query_probes, driver-side integers) are
     broadcast as a literal table; the corpus is quantized + bucketed
-    (one Arrow matmul per batch at impl='arrow') and LEFT-SEMI-joined
+    (one Arrow matmul per batch) and LEFT-SEMI-joined
     against it, so only probed buckets' rows survive. len(candidates)
     / corpus count IS the scanned fraction the canary grades."""
     if bits is None or seeds is None or flips is None or radius is None:
@@ -689,7 +630,7 @@ def ann_lsh_candidates(
     q = spread_scan(emb, id_col).select(
         F.col(id_col), quantize_vec(vec_col).alias("qv")
     ).filter(F.exists("qv", lambda x: x != 0))
-    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"], impl)
+    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"])
     cands = (
         stacked.join(probe, ["seed", "bucket"], "left_semi")
         .select(id_col, "qv")
@@ -709,7 +650,6 @@ def ann_topk_lsh_portable(
     seeds: int | None = None,
     flips: int | None = None,
     radius: int | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """ann_topk_lsh's ENGINE-PORTABLE twin: top-k by quantized cosine
     among corpus rows sharing a (seed, bucket) key with any of the
@@ -733,9 +673,9 @@ def ann_topk_lsh_portable(
             emb.count(), bits, seeds, flips, radius
         )
     qq, cands = ann_lsh_candidates(
-        emb, query_vec, dim, id_col, vec_col, bits, seeds, flips, radius, impl
+        emb, query_vec, dim, id_col, vec_col, bits, seeds, flips, radius
     )
-    return _topk_quantized_cosine(cands, qq, k, id_col, impl)
+    return _topk_quantized_cosine(cands, qq, k, id_col)
 
 
 def _batch_query_cos_udf(qqs: dict[int, list[int]]):
@@ -775,7 +715,6 @@ def ann_topk_lsh_batch_portable(
     seeds: int | None = None,
     flips: int | None = None,
     radius: int | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """BATCH form of ann_topk_lsh_portable: many queries, ONE plan —
     the serving-amortization twin of ivf_topk_batch_served for the
@@ -816,7 +755,7 @@ def ann_topk_lsh_batch_portable(
     q = emb.select(F.col(id_col), quantize_vec(vec_col).alias("qv")).filter(
         F.exists("qv", lambda x: x != 0)
     )
-    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"], impl)
+    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"])
     cands = (
         stacked.join(probe, ["seed", "bucket"])
         .select("query_id", id_col, "qv")
@@ -836,8 +775,8 @@ def ann_topk_lsh_batch_portable(
 
 def _query_cos_udf(qq: list[int]):
     """Arrow-vectorized exact cosine against a LITERAL quantized query
-    (closure-captured): same double expression shape as the HOF form
-    and the SQL replay — dot / (sqrt(self) * qnorm)."""
+    (closure-captured): same double expression shape as the SQL
+    replay — dot / (sqrt(self) * qnorm)."""
     from pyspark.sql.functions import pandas_udf
 
     qarr = np.asarray(qq, dtype=np.int64)
@@ -858,32 +797,14 @@ def _query_cos_udf(qq: list[int]):
 
 
 def _topk_quantized_cosine(
-    cands: DataFrame, qq: list[int], k: int, id_col: str, impl: str = "arrow"
+    cands: DataFrame, qq: list[int], k: int, id_col: str
 ) -> DataFrame:
     """(id, cos_sim) top-k of (id, qv) rows against a literal quantized
     query — exact int64 dots, double division, (cos desc, id) order,
     TakeOrderedAndProject. Shared tail of the one-shot and the
-    index-served ANN probes (bit-identical by construction).
-    impl='arrow' scores via one vectorized pandas_udf; impl='hof'
-    keeps the interpreted column form for the A/B."""
-    if impl == "arrow":
-        cos = _query_cos_udf(qq)(F.col("qv"))
-    else:
-        qlit = F.array(*[F.lit(v).cast("long") for v in qq])
-        dot_q = F.aggregate(
-            F.zip_with(F.col("qv"), qlit, lambda u, v: u * v),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        dot_self = F.aggregate(
-            F.zip_with(F.col("qv"), F.col("qv"), lambda u, v: u * v),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        qnorm = float(sum(v * v for v in qq)) ** 0.5
-        cos = dot_q.cast("double") / (
-            F.sqrt(dot_self.cast("double")) * F.lit(qnorm)
-        )
+    index-served ANN probes (bit-identical by construction), scored
+    by one vectorized pandas_udf."""
+    cos = _query_cos_udf(qq)(F.col("qv"))
     return (
         cands.withColumn("cos", cos)
         .orderBy(F.col("cos").desc(), id_col)
@@ -1002,7 +923,7 @@ def materialize_rp_index(
     q = emb.select(F.col(id_col), quantize_vec(vec_col).alias("qv")).filter(
         F.exists("qv", lambda x: x != 0)
     )
-    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"], impl="arrow")
+    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"])
     shift = _rp_prefix_shift(bits)
     (
         stacked.withColumn("bucket_pfx", F.shiftright("bucket", shift))
@@ -1084,7 +1005,7 @@ def rp_index_append(
     q = emb.select(F.col(id_col), quantize_vec(vec_col).alias("qv")).filter(
         F.exists("qv", lambda x: x != 0)
     )
-    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"], impl="arrow")
+    stacked = _stack_rp_buckets(q, masks, dim, [id_col, "qv"])
     shift = _rp_prefix_shift(bits)
     (
         stacked.withColumn("bucket_pfx", F.shiftright("bucket", shift))
@@ -1464,11 +1385,10 @@ def _pq_codebook_arrays(
 def _pq_codes_udf(subs, m: int, dsub: int):
     """Arrow-vectorized PQ assignment: ALL m subspace argmins for a
     batch of vectors in one NumPy pass, with every float op in the
-    exact sequence of the expression form it replaces —
+    exact sequence the DuckDB oracle's list_dot_product replay runs —
     d2 = ((seqdot(sv,sv) - 2*seqdot(sv,cv)) + seqdot(cv,cv)), products
-    and sums in double, sequential accumulation (_seq_dot). Replaces
-    the n x m x ks broadcast-join rows each paying 3 interpreted HOF
-    dots (the r13 PQ-family wall: 38-50s/query at sf0.1)."""
+    and sums in double, sequential accumulation (_seq_dot), so argmin
+    ties and near-ties resolve as the oracle's do."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<bigint>")
@@ -1497,55 +1417,20 @@ def pq_encode(
     dsub: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """PQ encode: each vector -> ``m`` one-byte-ish codes (its nearest
     codeword per subspace). 64 floats become 8 small ints — the 16-32x
     memory compression that lets an ANN index at 100 TB live in RAM.
 
-    impl='arrow' (default): one Arrow-batched NumPy pass computes all
-    m argmins per vector (codebooks collected driver-side — they are
-    broadcast-sized by construction), with sequential-order float
-    arithmetic bit-identical to the expression form (_pq_codes_udf).
-    impl='hof': the r12 shape — explode each vector into m subspace
-    slices, broadcast-join the codebooks (n*m*ks rows), argmin per
-    (vec, sub) with the expanded L2 form (sequential interpreted HOF
-    dots — the exact op order the DuckDB oracle runs), reassemble
-    sorted by subspace. Both produce identical codes (unit-pinned)."""
-    if impl == "arrow":
-        subs = _pq_codebook_arrays(codebooks, m)
-        udf = _pq_codes_udf(subs, m, dsub)
-        return emb.select(
-            F.col(id_col),
-            udf(F.col(vec_col).cast("array<double>")).alias("codes"),
-        )
-    from bo_sql_spark.functions import dot
-
-    parts = (
-        emb.select(
-            F.col(id_col),
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-            F.col(vec_col).alias("v"),
-        )
-        .select(
-            id_col,
-            "sub",
-            F.slice(F.col("v"), F.col("sub") * dsub + 1, F.lit(dsub)).alias("sv"),
-        )
-    )
-    sv, cv = F.col("sv"), F.col("c_vec")
-    d2 = dot(sv, sv) - 2 * dot(sv, cv) + dot(cv, cv)
-    best = (
-        parts.join(F.broadcast(codebooks), "sub")
-        .select(id_col, "sub", F.col("code"), d2.alias("_d2"))
-        .groupBy(id_col, "sub")
-        .agg(_argmin_code().alias("code"))
-    )
-    return best.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub", "code"))),
-            lambda s: s["code"],
-        ).alias("codes")
+    One Arrow-batched NumPy pass computes all m argmins per vector
+    (codebooks collected driver-side — they are broadcast-sized by
+    construction), with the oracle's sequential-order float arithmetic
+    (_pq_codes_udf)."""
+    subs = _pq_codebook_arrays(codebooks, m)
+    udf = _pq_codes_udf(subs, m, dsub)
+    return emb.select(
+        F.col(id_col),
+        udf(F.col(vec_col).cast("array<double>")).alias("codes"),
     )
 
 
@@ -1966,7 +1851,6 @@ def pq_train_step(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_dp: int = 6,
-    impl: str = "arrow",
 ) -> DataFrame:
     """One Lloyd iteration over ALL PQ subspaces in a single plan.
 
@@ -1984,57 +1868,30 @@ def pq_train_step(
     Returns (sub, code, n_members, c_vec); codewords that attracted no
     members drop out, same as empty IVF cells.
 
-    impl='arrow' (default) runs the assignment through the same
-    Arrow-batched sequential-order NumPy argmin as pq_encode
-    (_pq_codes_udf — bit-identical codes, unit-pinned); impl='hof'
-    keeps the n*m*ks broadcast-join expression form.
+    The assignment runs through the same Arrow-batched sequential-order
+    NumPy argmin as pq_encode (_pq_codes_udf).
     """
-    from bo_sql_spark.functions import dot
-
-    if impl == "arrow":
-        subs = _pq_codebook_arrays(codebooks, m)
-        udf = _pq_codes_udf(subs, m, dsub)
-        best = (
-            emb.select(
-                F.col(id_col),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-            .select(
-                F.col(id_col),
-                "v",
-                F.posexplode(udf(F.col("v"))).alias("sub", "code"),
-            )
-            .select(
-                id_col,
-                "sub",
-                "code",
-                F.slice(
-                    F.col("v"), F.col("sub") * dsub + 1, F.lit(dsub)
-                ).alias("sv"),
-            )
+    subs = _pq_codebook_arrays(codebooks, m)
+    udf = _pq_codes_udf(subs, m, dsub)
+    best = (
+        emb.select(
+            F.col(id_col),
+            F.col(vec_col).cast("array<double>").alias("v"),
         )
-    else:
-        parts = (
-            emb.select(
-                F.col(id_col),
-                F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-                F.col(vec_col).alias("v"),
-            )
-            .select(
-                id_col,
-                "sub",
-                F.slice(F.col("v").cast("array<double>"), F.col("sub") * dsub + 1,
-                        F.lit(dsub)).alias("sv"),
-            )
+        .select(
+            F.col(id_col),
+            "v",
+            F.posexplode(udf(F.col("v"))).alias("sub", "code"),
         )
-        sv, cw = F.col("sv"), F.col("c_vec")
-        d2 = dot(sv, sv) - 2 * dot(sv, cw) + dot(cw, cw)
-        best = (
-            parts.join(F.broadcast(codebooks), "sub")
-            .select(id_col, "sub", F.col("code"), F.col("sv"), d2.alias("_d2"))
-            .groupBy(id_col, "sub")
-            .agg(_argmin_code().alias("code"), F.first("sv").alias("sv"))
+        .select(
+            id_col,
+            "sub",
+            "code",
+            F.slice(
+                F.col("v"), F.col("sub") * dsub + 1, F.lit(dsub)
+            ).alias("sv"),
         )
+    )
     scale = 10 ** round_dp
     by_dim = (
         best.select("sub", "code", F.posexplode("sv"))
@@ -2381,7 +2238,6 @@ def rotate_embeddings(
     rot_micro: list[list[int]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Apply an integer-micro rotation matrix to a vector column with
     EXACT cross-engine arithmetic: v_int = floor(v*1e6 + 0.5) (BIGINT
@@ -2393,50 +2249,29 @@ def rotate_embeddings(
     then feed the UNCHANGED trained-PQ pipeline, whose own fixed-point
     doctrine re-quantizes them identically in both engines.
 
-    impl='arrow' (default): one NumPy int64 matmul per Arrow batch —
-    and because every partial sum is an integer < 2^53, the matmul is
-    exact in ANY accumulation order, so arrow and the expression form
-    are bit-identical WITHOUT the sequential-order care the float PQ
-    argmin needs. impl='hof': one nested higher-order expression per
-    vector — no shuffle; the 4096-multiply cost per vector is the
-    inherent dense-rotation cost of OPQ at any scale, but interpreted
-    (CodegenFallback) it dominated similarity_opq_adc's wall."""
-    if impl == "arrow":
-        from pyspark.sql.functions import pandas_udf
+    One NumPy int64 matmul per Arrow batch — and because every partial
+    sum is an integer < 2^53, the matmul is exact in ANY accumulation
+    order, so it matches the DuckDB oracle's replay WITHOUT the
+    sequential-order care the float PQ argmin needs. No shuffle; the
+    4096-multiply cost per vector is the inherent dense-rotation cost
+    of OPQ at any scale."""
+    from pyspark.sql.functions import pandas_udf
 
-        rot_t = np.array(rot_micro, dtype=np.int64).T  # (dims, dims)
+    rot_t = np.array(rot_micro, dtype=np.int64).T  # (dims, dims)
 
-        @pandas_udf("array<double>")
-        def rotate(vec: pd.Series) -> pd.Series:
-            if len(vec) == 0:
-                return pd.Series([], dtype=object)
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in vec])
-            vi = np.floor(mat * 1_000_000 + 0.5).astype(np.int64)
-            y = vi @ rot_t  # exact int64: partials < 2^53
-            return pd.Series(list(y.astype(np.float64) / 1e12))
+    @pandas_udf("array<double>")
+    def rotate(vec: pd.Series) -> pd.Series:
+        if len(vec) == 0:
+            return pd.Series([], dtype=object)
+        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vec])
+        vi = np.floor(mat * 1_000_000 + 0.5).astype(np.int64)
+        y = vi @ rot_t  # exact int64: partials < 2^53
+        return pd.Series(list(y.astype(np.float64) / 1e12))
 
-        return emb.select(
-            F.col(id_col),
-            rotate(F.col(vec_col).cast("array<double>")).alias(vec_col),
-        )
-    # ONE nested Literal node (array<array<bigint>>) — building it from
-    # 4096 F.lit calls wrapped in F.array would re-evaluate the array
-    # constructor per row and ran ~20x slower
-    rot_lit = F.lit([[int(v) for v in row] for row in rot_micro])
-    vi = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.floor(x * 1_000_000 + F.lit(0.5)).cast("long"),
+    return emb.select(
+        F.col(id_col),
+        rotate(F.col(vec_col).cast("array<double>")).alias(vec_col),
     )
-    y = F.transform(
-        rot_lit,
-        lambda row: F.aggregate(
-            F.zip_with(row, vi, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    rotated = F.transform(y, lambda e: e.cast("double") / F.lit(1e12))
-    return emb.select(F.col(id_col), rotated.alias(vec_col))
 
 
 def knn_graph(
@@ -2445,7 +2280,6 @@ def knn_graph(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Corpus-wide approximate k-NN GRAPH: every vector's top-k cosine
     neighbors within its IVF cell — (id, neighbor_id, rank, cos_sim).
@@ -2468,49 +2302,26 @@ def knn_graph(
 
     Determinism: ranking orders by (cos DESC, neighbor id); cosine is
     the bitwise-portable dot/sqrt chain every similarity oracle uses.
-
-    impl='arrow' (default) scores the in-cell pairs with the shared
-    Arrow sequential-order pair cosine (dedup._float_pair_cos_udf —
-    np.cumsum replays the fold order of aggregate(zip_with), so it is
-    bit-identical to the interpreted HOF form, which stays behind
-    impl='hof'; unit-pinned). This was the last interpreted pair-
-    cosine site after the r13 de-interpretation campaign (r13 verdict
-    #2) — the HOF dot was CodegenFallback, evaluated once per in-cell
-    candidate pair.
+    The in-cell pairs are scored by the shared Arrow sequential-order
+    pair cosine (dedup._float_pair_cos_udf — np.cumsum replays the
+    left-to-right fold of the oracle's list_dot_product).
     """
     from pyspark.sql.window import Window
 
-    from bo_sql_spark.functions import dot, l2_norm
+    from bo_sql_spark.operators.dedup import _float_pair_cos_udf
 
     assigned = lineage_cut(
         ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col), eager=True
     )
-    if impl == "arrow":
-        from bo_sql_spark.operators.dedup import _float_pair_cos_udf
-
-        an = assigned.select(
-            "cell", F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-        )
-        other = an.select(
-            "cell",
-            F.col(id_col).alias("neighbor_id"),
-            F.col("_v").alias("_v2"),
-        )
-        sim = _float_pair_cos_udf()(F.col("_v"), F.col("_v2"))
-    else:
-        an = assigned.select(
-            "cell",
-            F.col(id_col),
-            F.col(vec_col),
-            l2_norm(F.col(vec_col)).alias("_n"),
-        )
-        other = an.select(
-            "cell",
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_v2"),
-            F.col("_n").alias("_n2"),
-        )
-        sim = dot(F.col(vec_col), F.col("_v2")) / (F.col("_n") * F.col("_n2"))
+    an = assigned.select(
+        "cell", F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+    )
+    other = an.select(
+        "cell",
+        F.col(id_col).alias("neighbor_id"),
+        F.col("_v").alias("_v2"),
+    )
+    sim = _float_pair_cos_udf()(F.col("_v"), F.col("_v2"))
     pairs = (
         an.join(other, "cell")
         .filter(F.col(id_col) != F.col("neighbor_id"))

@@ -172,6 +172,25 @@ def test_missing_table_skipped(fresh, sf_dir, tmp_path):
     assert load_tables(fresh, str(tmp_path / "absent")) == {}
 
 
+def test_switch_drops_views_the_new_dir_lacks(fresh, sf_dir, tmp_path):
+    """A table missing from the new directory must not keep serving the
+    previous directory's rows; a view loaded by other means stays.
+    The switch fires no Spark job."""
+    from pyspark.sql.utils import AnalysisException
+
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), tmp_path / "region.parquet")
+    load_tables(fresh, sf_dir)
+    load_parquet(fresh, os.path.join(sf_dir, "nation.parquet"), name="my_nation")
+    tables, n = _jobs_during(
+        fresh, "catalog.switch", lambda: load_tables(fresh, str(tmp_path))
+    )
+    assert sorted(tables) == ["region"] and n == 0
+    with pytest.raises(AnalysisException):
+        fresh.table("lineitem")
+    assert fresh.table("region").count() == 5
+    assert fresh.table("my_nation").count() == 25
+
+
 def test_load_parquet_single_file_fires_no_jobs(fresh, sf_dir, tmp_path):
     path = os.path.join(sf_dir, "orders.parquet")
     df, n = _jobs_during(

@@ -101,18 +101,17 @@ def test_gopher_filter_plan_has_no_shuffle(spark, sf_dir):
 
 
 def test_dup_ngram_frac_null_tokens(spark):
-    """NULL token arrays yield 0.0 in BOTH impls (ADVICE r13: the
-    arrow UDF crashed on list(None) where the hof form returned 0.0)."""
+    """NULL and empty token arrays yield 0.0 (ADVICE r13: the arrow UDF
+    once crashed on list(None)); the bigrams ab,ba,ab,ba hold 2
+    distinct of 4, so the first row reads 1 - 2/4 = 0.5."""
     df = spark.createDataFrame(
         [(1, ["a", "b", "a", "b", "a"]), (2, None), (3, [])],
         "doc_id long, toks array<string>",
     )
-    for impl in ("arrow", "hof"):
-        got = {
-            r["doc_id"]: r["f"]
-            for r in df.select(
-                "doc_id",
-                CF.dup_ngram_frac(F.col("toks"), 2, impl=impl).alias("f"),
-            ).collect()
-        }
-        assert got[1] == 0.5 and got[2] == 0.0 and got[3] == 0.0, (impl, got)
+    got = {
+        r["doc_id"]: r["f"]
+        for r in df.select(
+            "doc_id", CF.dup_ngram_frac(F.col("toks"), 2).alias("f")
+        ).collect()
+    }
+    assert got == {1: 0.5, 2: 0.0, 3: 0.0}

@@ -12,7 +12,7 @@ from bo_sql_spark.operators import dedup as D
 from bo_sql_spark.operators import multimodal as M
 from bo_sql_spark.operators import similarity as S
 from bo_sql_spark.operators import text as T
-from bo_sql_spark.operators.asof import asof_join
+from bo_sql_spark.operators.asof import _asof_cogroup, asof_join
 
 
 @pytest.fixture(scope="module")
@@ -317,7 +317,10 @@ def test_asof_join_backward_semantics(spark, strategy):
     right = spark.createDataFrame(
         [(1, 8, "a"), (1, 15, "b"), (3, 1, "z")], "k long, tsn long, tag string"
     )
-    out = asof_join(left, right, on="tsn", by="k", right_cols=["tag"], strategy=strategy)
+    if strategy == "window":
+        out = asof_join(left, right, on="tsn", by="k", right_cols=["tag"])
+    else:
+        out = _asof_cogroup(left, right, "tsn", "k", ["tag"], None, "backward")
     got = {(r["k"], r["tsn"]): r["tag"] for r in out.collect()}
     assert got[(1, 10)] == "a"  # most recent at-or-before 10
     assert got[(1, 20)] == "b"
@@ -355,12 +358,9 @@ def test_asof_window_strategy_matches_cogroup(spark):
         for tol in (None, 7):
             a = asof_join(
                 left, right, on="tsn", by="k", tolerance=tol,
-                direction=direction, strategy="window",
+                direction=direction,
             )
-            b = asof_join(
-                left, right, on="tsn", by="k", tolerance=tol,
-                direction=direction, strategy="cogroup",
-            )
+            b = _asof_cogroup(left, right, "tsn", "k", None, tol, direction)
             ka = sorted(map(tuple, a.collect()))
             kb = sorted(map(tuple, b.collect()))
             assert ka == kb, f"{direction} tol={tol}: {ka[:3]} vs {kb[:3]}"
@@ -3334,13 +3334,30 @@ def test_rp_auto_params_rule():
         assert rp_auto_probe_params(hi + 1)[0] == b + 1
 
 
+def _seq_dot_py(a, b) -> float:
+    """Left-to-right double dot product, one ``acc += x * y`` at a
+    time — the fold order of DuckDB's list_dot_product."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _spark_round6(x: float) -> float:
+    """Spark's round(double, 6): HALF_UP on the double's decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
 def test_pq_arrow_and_hof_paths_identical(spark, sf_dir):
-    """The Arrow PQ assignment (sequential-order NumPy argmin via
-    cumsum) and the broadcast-join HOF expression form must produce
-    IDENTICAL codes and identical trained codebooks — the sequential
-    float accumulation is replayed exactly, so even distance near-ties
-    resolve the same way. Rotation likewise (its integer sums are
-    order-independent outright)."""
+    """PQ encode, one Lloyd step and the OPQ rotation must equal a
+    pure-Python replay of their definitions on the fixture: argmin of
+    d2 = (ss - 2*sc) + cc over left-to-right float dots, exact-distance
+    ties to the smallest code (so even near-ties resolve like the
+    oracle); fixed-point micro means; exact integer rotation sums."""
+    import math
+
     from bo_sql_spark.operators.similarity import (
         pq_codebooks_from_seeds,
         pq_encode,
@@ -3349,59 +3366,90 @@ def test_pq_arrow_and_hof_paths_identical(spark, sf_dir):
         seeded_rotation_micro,
     )
 
+    m = dsub = 8
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cb0 = pq_codebooks_from_seeds(emb, m=8, dsub=8, ks=16)
-    a = {r["vec_id"]: list(r["codes"])
-         for r in pq_encode(emb, cb0, 8, 8, impl="arrow").collect()}
-    h = {r["vec_id"]: list(r["codes"])
-         for r in pq_encode(emb, cb0, 8, 8, impl="hof").collect()}
-    assert a == h and len(a) > 0
+    vecs = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in emb.collect()}
+    cb0 = pq_codebooks_from_seeds(emb, m=m, dsub=dsub, ks=16)
+    book = {}
+    for r in cb0.collect():
+        book.setdefault(r["sub"], []).append((r["code"], list(r["c_vec"])))
 
-    ta = sorted(
-        (r["sub"], r["code"], r["n_members"], tuple(r["c_vec"]))
-        for r in pq_train_step(emb, cb0, 8, 8, impl="arrow").collect()
+    want_codes = {}
+    for vid, v in vecs.items():
+        codes = []
+        for s in range(m):
+            sv = v[s * dsub:(s + 1) * dsub]
+            ss = _seq_dot_py(sv, sv)
+            codes.append(min(
+                ((ss - 2 * _seq_dot_py(sv, cv)) + _seq_dot_py(cv, cv), code)
+                for code, cv in book[s]
+            )[1])
+        want_codes[vid] = codes
+    got = {r["vec_id"]: list(r["codes"])
+           for r in pq_encode(emb, cb0, m, dsub).collect()}
+    assert got == want_codes and len(got) == len(vecs) > 0
+
+    members = {}
+    for vid, codes in want_codes.items():
+        for s, code in enumerate(codes):
+            members.setdefault((s, code), []).append(
+                vecs[vid][s * dsub:(s + 1) * dsub]
+            )
+    scale = 10 ** 6
+    want_train = sorted(
+        (s, code, len(svs), tuple(
+            math.floor(
+                sum(math.floor(sv[d] * scale + 0.5) for sv in svs) / len(svs)
+                + 0.5
+            ) / float(scale)
+            for d in range(dsub)
+        ))
+        for (s, code), svs in members.items()
     )
-    th = sorted(
+    got_train = sorted(
         (r["sub"], r["code"], r["n_members"], tuple(r["c_vec"]))
-        for r in pq_train_step(emb, cb0, 8, 8, impl="hof").collect()
+        for r in pq_train_step(emb, cb0, m, dsub).collect()
     )
-    assert ta == th
+    assert got_train == want_train
 
     rot = seeded_rotation_micro()
-    ra = {r["vec_id"]: tuple(r["embedding"])
-          for r in rotate_embeddings(emb, rot, impl="arrow").collect()}
-    rh = {r["vec_id"]: tuple(r["embedding"])
-          for r in rotate_embeddings(emb, rot, impl="hof").collect()}
-    assert ra == rh
+    want_rot = {}
+    for vid, v in vecs.items():
+        vi = [math.floor(x * 1_000_000 + 0.5) for x in v]
+        want_rot[vid] = tuple(
+            sum(rij * xj for rij, xj in zip(row, vi)) / 1e12 for row in rot
+        )
+    got_rot = {r["vec_id"]: tuple(r["embedding"])
+               for r in rotate_embeddings(emb, rot).collect()}
+    assert got_rot == want_rot
 
 
 def test_semantic_pair_dot_arrow_hof_identical(spark, sf_dir):
-    """The semantic-dedup pair verify's _pair_dot must be bit-equal
-    between the Arrow (cumsum-sequential NumPy) and interpreted HOF
-    forms over every same-cell pair of the fixture."""
+    """The semantic-dedup pair verify's Arrow dot (_pair_dot_udf) must
+    equal a left-to-right ``acc += x * y`` replay, bit for bit, over
+    every pair of the fixture's first 300 vectors."""
     import pyspark.sql.functions as F
 
-    from bo_sql_spark.operators.dedup import _pair_dot
+    from bo_sql_spark.operators.dedup import _pair_dot_udf
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         "vec_id < 300"
     )
+    vecs = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in emb.collect()}
     a = emb.select(F.col("vec_id").alias("ida"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("idb"), F.col("embedding").alias("vb"))
     pairs = a.join(b, F.col("ida") < F.col("idb"))
-    got_a = {
+    got = {
         (r.ida, r.idb): r.d
         for r in pairs.select(
-            "ida", "idb", _pair_dot(F.col("va"), F.col("vb"), "arrow").alias("d")
+            "ida", "idb", _pair_dot_udf()(F.col("va"), F.col("vb")).alias("d")
         ).collect()
     }
-    got_h = {
-        (r.ida, r.idb): r.d
-        for r in pairs.select(
-            "ida", "idb", _pair_dot(F.col("va"), F.col("vb"), "hof").alias("d")
-        ).collect()
+    want = {
+        (i, j): _seq_dot_py(vecs[i], vecs[j])
+        for i in vecs for j in vecs if i < j
     }
-    assert got_a == got_h and len(got_a) > 0
+    assert got == want and len(got) > 0
 
 
 def test_ivf_auto_cells_rule():
@@ -3450,43 +3498,95 @@ def test_rp_query_probes_structure():
             assert bin(b ^ base_by_seed[s]).count("1") <= radius
 
 
+def _quantize_py(v) -> list[int]:
+    """round(x * 1e6) half away from zero, as quantize_vec rounds."""
+    import math
+
+    return [int(math.copysign(math.floor(abs(x) * 1e6 + 0.5), x)) for x in v]
+
+
+def _rp_buckets_py(qv, masks) -> list[int]:
+    """Per-seed bucket id: bit p set iff the exact integer projection
+    sum(+-qv[d]) under mask p is >= 0."""
+    out = []
+    for row in masks:
+        b = 0
+        for p, m in enumerate(row):
+            proj = 0
+            for d, x in enumerate(qv):
+                proj += x if (m >> d) & 1 else -x
+            if proj >= 0:
+                b |= 1 << p
+        out.append(b)
+    return out
+
+
 def test_rp_arrow_and_hof_paths_identical(spark, sf_dir):
-    """The Arrow (NumPy int64 matmul) and interpreted-HOF bucket/verify
-    paths must produce IDENTICAL rows — exact integer arithmetic both
-    ways — for the self-join and the top-k probe."""
+    """The Arrow (NumPy int64 matmul) bucket/verify path must equal a
+    pure-Python replay with exact int sums, for the self-join and the
+    top-k probe: same candidates, same exact-integer cosines."""
+    import math
+
     from bo_sql_spark.operators.similarity import (
         ann_topk_lsh_portable,
         approx_similarity_join_portable,
+        rp_query_probes,
+        rp_sign_masks,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         "vec_id < 300"
     )
-    a = sorted(
+    qvs = {
+        r["vec_id"]: _quantize_py(r["embedding"]) for r in emb.collect()
+    }
+    qvs = {i: q for i, q in qvs.items() if any(q)}
+
+    def icos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        aa = sum(x * x for x in a)
+        bb = sum(y * y for y in b)
+        return float(dot) / (math.sqrt(float(aa)) * math.sqrt(float(bb)))
+
+    masks = rp_sign_masks(2, 4)
+    keys = {i: set(enumerate(_rp_buckets_py(q, masks))) for i, q in qvs.items()}
+    want = sorted(
+        (i, j, _spark_round6(c))
+        for i in qvs for j in qvs
+        if i < j and keys[i] & keys[j]
+        for c in [icos(qvs[i], qvs[j])] if c >= 0.35
+    )
+    got = sorted(
         (r.id_a, r.id_b, r.cos_sim)
         for r in approx_similarity_join_portable(
-            emb, 0.35, dim=64, bits=4, seeds=2, impl="arrow"
+            emb, 0.35, dim=64, bits=4, seeds=2
         ).collect()
     )
-    h = sorted(
-        (r.id_a, r.id_b, r.cos_sim)
-        for r in approx_similarity_join_portable(
-            emb, 0.35, dim=64, bits=4, seeds=2, impl="hof"
-        ).collect()
-    )
-    assert a == h and len(a) > 0
+    assert got == want and len(got) > 0
 
     qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
     corpus = emb.filter("vec_id <> 0")
-    ta = [
+    # the probe knobs the operator derives from the corpus count
+    bits, seeds, flips, radius = S._resolve_probe_params(
+        corpus.count(), None, None, None, None
+    )
+    qq, probes = rp_query_probes(qvec, 64, bits, seeds, flips, radius)
+    masks = rp_sign_masks(seeds, bits)
+    qnorm = float(sum(v * v for v in qq)) ** 0.5
+    scored = []
+    for i, q in qvs.items():
+        if i == 0 or not set(enumerate(_rp_buckets_py(q, masks))) & set(probes):
+            continue
+        dot = sum(x * y for x, y in zip(q, qq))
+        scored.append(
+            (-(float(dot) / (math.sqrt(float(sum(x * x for x in q))) * qnorm)), i)
+        )
+    want_top = [(i, _spark_round6(-c)) for c, i in sorted(scored)[:10]]
+    got_top = [
         (r.vec_id, r.cos_sim)
-        for r in ann_topk_lsh_portable(corpus, qvec, k=10, dim=64, impl="arrow").collect()
+        for r in ann_topk_lsh_portable(corpus, qvec, k=10, dim=64).collect()
     ]
-    th = [
-        (r.vec_id, r.cos_sim)
-        for r in ann_topk_lsh_portable(corpus, qvec, k=10, dim=64, impl="hof").collect()
-    ]
-    assert ta == th and len(ta) == 10
+    assert got_top == want_top and len(got_top) == 10
 
 
 def test_weighted_reservoir_matches_python_replay(spark):
@@ -3847,46 +3947,63 @@ def test_rp_index_meta_sidecar(spark, sf_dir, tmp_path):
 
 
 def test_knn_graph_arrow_hof_bit_equal(spark, sf_dir):
-    """The Arrow pair-cosine default (r13 verdict #2: the last
-    interpreted HOF pair-cosine site) is BIT-identical to the hof
-    form — same sequential fold order, same IEEE op sequence — so the
-    graph (ids, ranks, AND unrounded-then-rounded scores) is equal
-    row-for-row."""
+    """The Arrow pair-cosine kNN graph must equal a pure-Python replay
+    row-for-row — IVF cell by argmin of (ss - 2*sc) + cc, in-cell
+    cosine from left-to-right ``acc += x * y`` dots, rank by (cos
+    desc, neighbor id) — so ids, ranks AND rounded scores agree."""
+    import math
+
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cents = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
     )
-    key = lambda rows: sorted(
-        (r["vec_id"], r["rank"], r["neighbor_id"], r["cos_sim"]) for r in rows
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    cvecs = {r["c_id"]: list(r["c_vec"]) for r in cents.collect()}
+    cell = {
+        i: min(
+            ((_seq_dot_py(v, v) - 2 * _seq_dot_py(v, c)) + _seq_dot_py(c, c), cid)
+            for cid, c in cvecs.items()
+        )[1]
+        for i, v in vecs.items()
+    }
+
+    def cos(a, b):
+        return _seq_dot_py(a, b) / (
+            math.sqrt(_seq_dot_py(a, a)) * math.sqrt(_seq_dot_py(b, b))
+        )
+
+    want = []
+    for i, v in vecs.items():
+        nbrs = sorted(
+            (-cos(v, vecs[j]), j)
+            for j in vecs if j != i and cell[j] == cell[i]
+        )[:5]
+        want += [
+            (i, rank, j, _spark_round6(-c))
+            for rank, (c, j) in enumerate(nbrs, start=1)
+        ]
+    got = sorted(
+        (r["vec_id"], r["rank"], r["neighbor_id"], r["cos_sim"])
+        for r in S.knn_graph(emb, cents, k=5).collect()
     )
-    arrow = key(S.knn_graph(emb, cents, k=5, impl="arrow").collect())
-    hof = key(S.knn_graph(emb, cents, k=5, impl="hof").collect())
-    assert arrow == hof and len(arrow) > 0
+    assert got == sorted(want) and len(got) > 0
 
 
 def test_connected_components_unroll_invariant(spark):
-    """unroll composes k propagation rounds per checkpoint/probe; the
-    fixpoint (labels only decrease, extra rounds are no-ops) makes the
-    result identical for any unroll — pinned on a chain + islands
-    (diameter > 1, so unroll=3 crosses the convergence point mid-plan)."""
+    """Min-label components of a chain + islands (diameter > 1, so the
+    loop runs past one propagation + shortcut round)."""
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11), (20, 21)],
         "id_a long, id_b long",
     )
-    want = sorted(
+    got = sorted(
         (r["node"], r["cluster_id"])
-        for r in D.connected_components(pairs, unroll=1).collect()
+        for r in D.connected_components(pairs).collect()
     )
-    assert want == [(0, 0), (1, 0), (2, 0), (3, 0), (4, 0),
-                    (10, 10), (11, 10), (20, 20), (21, 20)]
-    for unroll in (2, 3):
-        got = sorted(
-            (r["node"], r["cluster_id"])
-            for r in D.connected_components(pairs, unroll=unroll).collect()
-        )
-        assert got == want, unroll
+    assert got == [(0, 0), (1, 0), (2, 0), (3, 0), (4, 0),
+                   (10, 10), (11, 10), (20, 20), (21, 20)]
 
 
 def test_connected_components_stale_doubling_path_graph(spark):

@@ -1,6 +1,6 @@
 """Round-14 optimization tests: spread_scan semantics and the
-narrow (long-grain) embedding-centroid fold's bit-equality with the
-wide r13 form."""
+long-grain embedding-centroid and wide simhash folds, each pinned
+against a pure-Python replay or the mergeable-summary path."""
 
 import os
 
@@ -66,6 +66,28 @@ def test_only_parallel_calls_local_checkpoint():
     assert callers == ["parallel.py"]
 
 
+def test_no_implementation_selection_parameters():
+    """One kernel per operator: no function in the package takes an
+    ``impl`` switch, and connected_components / asof_join pick their
+    plan without an ``unroll`` / ``strategy`` knob."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "bo_sql_spark"
+    banned = {"impl": None, "unroll": "connected_components",
+              "strategy": "asof_join"}
+    found = []
+    for p in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text(), str(p))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                if arg.arg in banned and banned[arg.arg] in (None, node.name):
+                    found.append(f"{p.relative_to(pkg)}:{node.name}({arg.arg})")
+    assert found == []
+
+
 def test_mad_cuts_follow_ckpt_switch(spark, monkeypatch):
     """robust_outliers_from_counts' two lazy cuts honour the switch:
     no LogicalRDD leaf under BOSQL_CKPT_DISABLE=1, same rows either
@@ -111,24 +133,53 @@ def _toy_emb(spark):
     )
 
 
+def _centroid_drift_py(rows):
+    """Pure-Python replay of embedding_centroid_drift: exact int sums of
+    the round-half-away-from-zero micro-quantized components per group
+    and globally, cosine of the sum vectors as one double division,
+    Spark's HALF_UP round to 6 places."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sums, counts = {}, {}
+    for _, grp, vec in rows:
+        q = [int(math.copysign(math.floor(abs(x) * 1e6 + 0.5), x)) for x in vec]
+        acc = sums.setdefault(grp, [0] * len(q))
+        for d, x in enumerate(q):
+            acc[d] += x
+        counts[grp] = counts.get(grp, 0) + 1
+    dims = max(len(s) for s in sums.values())
+    glob = [sum(s[d] for s in sums.values() if d < len(s)) for d in range(dims)]
+    gg = sum(g * g for g in glob)
+    out = set()
+    for grp, s in sums.items():
+        lg = sum(x * glob[d] for d, x in enumerate(s))
+        ll = sum(x * x for x in s)
+        cos = None
+        if ll and gg:
+            c = float(lg) / (math.sqrt(float(ll)) * math.sqrt(float(gg)))
+            cos = float(
+                Decimal(repr(c)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+            )
+        out.add((grp, counts[grp], cos))
+    return sorted(out)
+
+
 def test_centroid_drift_narrow_equals_wide(spark):
+    """The long-grain (grp, d) fold equals a pure-Python replay with
+    exact integer sums."""
     from bo_sql_spark.operators.drift import embedding_centroid_drift
 
     emb = _toy_emb(spark)
-    wide = sorted(
+    got = sorted(
         tuple(r)
-        for r in embedding_centroid_drift(
-            emb, "label", dims=3, impl="wide"
-        ).collect()
+        for r in embedding_centroid_drift(emb, "label", dims=3).collect()
     )
-    narrow = sorted(
-        tuple(r)
-        for r in embedding_centroid_drift(
-            emb, "label", dims=3, impl="narrow"
-        ).collect()
+    want = _centroid_drift_py(
+        [(r["vec_id"], r["label"], r["embedding"]) for r in emb.collect()]
     )
-    assert wide == narrow
-    assert len(narrow) == 3
+    assert got == want
+    assert len(got) == 3
 
 
 def test_centroid_drift_narrow_counts_empty_vectors(spark):
@@ -147,9 +198,7 @@ def test_centroid_drift_narrow_counts_empty_vectors(spark):
     )
     out = {
         r["label"]: r["n_vectors"]
-        for r in embedding_centroid_drift(
-            emb, "label", dims=2, impl="narrow"
-        ).collect()
+        for r in embedding_centroid_drift(emb, "label", dims=2).collect()
     }
     assert out == {0: 2, 1: 1}
 
@@ -174,9 +223,7 @@ def test_centroid_from_sums_narrow_matches_operator(spark):
     )
     direct = sorted(
         tuple(r)
-        for r in embedding_centroid_drift(
-            emb, "label", dims=3, impl="narrow"
-        ).collect()
+        for r in embedding_centroid_drift(emb, "label", dims=3).collect()
     )
     assert via_sums == direct
 
@@ -228,9 +275,13 @@ def test_no_spread_context(spark):
 
 
 def test_simhash_portable_narrow_equals_wide(spark):
-    """The reopen-session long-grain simhash fold (impl='narrow') must
-    be bit-identical to the wide 60-aggregate r13 form — same ±1
-    integer sums, OR of distinct single-bit values == their sum."""
+    """The wide branch-free simhash fold (bit j set iff 2*s_j > n) must
+    equal a pure-Python replay of the definition: md5-15-hex token
+    hashes, a +-1 sum per bit over the DISTINCT tokens, bit set iff
+    the sum is > 0."""
+    import hashlib
+    import re
+
     from bo_sql_spark.operators.dedup import simhash_portable
 
     rows = [
@@ -238,20 +289,32 @@ def test_simhash_portable_narrow_equals_wide(spark):
         (1, "the quick brown fox jumps over the lazy cat"),
         (2, "pack my box with five dozen liquor jugs"),
         (3, "a"),  # single token: every bit decided by one hash
-        (4, None),  # NULL text excluded by both forms
+        (4, None),  # NULL text excluded
         (5, "   "),  # whitespace-only: split yields [''] -> excluded
     ]
+    want = {}
+    for doc_id, text in rows:
+        if text is None:
+            continue
+        toks = set(re.sub(r"\s+", " ", text.lower()).strip(" ").split(" "))
+        hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
+              for t in toks if t]
+        if not hs:
+            continue
+        sig = 0
+        for j in range(60):
+            acc = 0
+            for h in hs:
+                acc += 1 if (h >> j) & 1 else -1
+            if acc > 0:
+                sig |= 1 << j
+        want[doc_id] = sig
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    wide = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash_portable(docs, impl="wide").collect()
+    got = {
+        r["doc_id"]: r["simhash"] for r in simhash_portable(docs).collect()
     }
-    narrow = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash_portable(docs, impl="narrow").collect()
-    }
-    assert narrow == wide
-    assert set(narrow) == {0, 1, 2, 3}  # 4 and 5 drop out in both
+    assert got == want
+    assert set(got) == {0, 1, 2, 3}  # 4 and 5 drop out
 
 
 def test_kmv_overlap_exact_quad_identity(spark, sf_dir):
