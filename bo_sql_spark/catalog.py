@@ -14,8 +14,6 @@ cluster you'd persist them with ANALYZE TABLE for CBO).
 
 from __future__ import annotations
 
-import atexit
-import contextlib
 import functools
 import os
 import weakref
@@ -67,18 +65,16 @@ def _purge_stopped_sessions() -> None:
 
 @functools.cache
 def _package_zip() -> str:
-    """Zip of the ``bo_sql_spark`` sources, built once per process and
-    deleted at interpreter exit. Every session of the process ships the
-    same file."""
-    import tempfile
+    """Zip of the ``bo_sql_spark`` sources, built once per process in
+    the scratch root, which is removed at interpreter exit. Every
+    session of the process ships the same file."""
     import zipfile
 
     import bo_sql_spark
+    from bo_sql_spark.scratch import scratch_dir
 
     pkg_dir = os.path.dirname(os.path.abspath(bo_sql_spark.__file__))
-    fd, zpath = tempfile.mkstemp(prefix="bo_sql_spark_pkg_", suffix=".zip")
-    os.close(fd)
-    atexit.register(_remove_quietly, zpath)
+    zpath = os.path.join(scratch_dir("pkg"), "bo_sql_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
@@ -92,11 +88,6 @@ def _package_zip() -> str:
                 )
                 zf.write(full, rel)
     return zpath
-
-
-def _remove_quietly(path: str) -> None:
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(path)
 
 
 def _ship_package_to_workers(spark: SparkSession) -> None:

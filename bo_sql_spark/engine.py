@@ -26,6 +26,7 @@ One-shot mode: ``python -m bo_sql_spark --sql '<query>'
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
@@ -206,18 +207,16 @@ def main(argv: list[str] | None = None) -> int:
         # Reference one-shot behavior (main.cpp:115-127): with --sql and
         # no CSV argument, stdin IS the CSV, registered as 'table'
         # (`cat f.csv | bo-sql --sql ...`). Spark reads files, not
-        # pipes, so spool stdin to a temp file first.
-        import tempfile
+        # pipes, so spool stdin to a file in the scratch root first.
+        from bo_sql_spark.scratch import scratch_dir
 
         text = sys.stdin.read()
         if text.strip():
-            tmp = tempfile.NamedTemporaryFile(
-                mode="w", suffix=".csv", prefix="bosql_stdin_", delete=False
-            )
-            tmp.write(text)
-            tmp.close()
+            spool = os.path.join(scratch_dir("stdin"), "table.csv")
+            with open(spool, "w") as fh:
+                fh.write(text)
             try:
-                engine.load_table("table", tmp.name)
+                engine.load_table("table", spool)
             except Exception as exc:
                 print(f"error loading CSV from stdin: {exc}", file=sys.stderr)
                 return 1

@@ -21,10 +21,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 Builder = Callable[[SparkSession, str], DataFrame]
+Prepare = Callable[[SparkSession, str], Any]
+Serve = Callable[[SparkSession, str, Any], DataFrame]
 
 
 @dataclass
@@ -34,6 +37,11 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL; None => non-SQL-expressible, rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
+    # Served entries: ``prepare(spark, sf_dir)`` builds the store once
+    # and returns the state (paths, driver lookups) that each
+    # ``serve(spark, sf_dir, state)`` read answers from. ``builder``
+    # runs both, so every caller of it sees one self-contained query.
+    amortized: tuple[Prepare, Serve] | None = None
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -44,11 +52,26 @@ def register(
     oracle: str | None,
     doc: str = "",
     tags: tuple[str, ...] = (),
-) -> Callable[[Builder], Builder]:
-    def deco(fn: Builder) -> Builder:
+    prepare: Prepare | None = None,
+) -> Callable:
+    """Register the decorated builder under ``name``. With ``prepare``
+    the decorated function is the entry's serve step instead, taking
+    the state ``prepare`` returns as its third argument."""
+
+    def deco(fn):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name=name, builder=fn, oracle=oracle, doc=doc, tags=tags)
+        builder, amortized = fn, None
+        if prepare is not None:
+            amortized = (prepare, fn)
+
+            def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+                return fn(spark, sf_dir, prepare(spark, sf_dir))
+
+        REGISTRY[name] = QuerySpec(
+            name=name, builder=builder, oracle=oracle, doc=doc, tags=tags,
+            amortized=amortized,
+        )
         return fn
 
     return deco

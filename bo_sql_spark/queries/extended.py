@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from bo_sql_spark.catalog import load_tables
 from bo_sql_spark.queries import register
+from bo_sql_spark.scratch import scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -1884,12 +1885,11 @@ def percentile_weighted_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_percentile_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators.quantile_sketch import weighted_percentile_exact
 
     li_schema = _t(spark, sf_dir)["lineitem"].schema
-    root = tempfile.mkdtemp(prefix="bosql_wpct_stream_")
+    root = scratch_dir("wpct_stream")
     store = os.path.join(root, "counts")
 
     stream = (

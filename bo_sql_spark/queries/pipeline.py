@@ -31,6 +31,7 @@ from bo_sql_spark.operators import text as T
 from bo_sql_spark.operators.asof import asof_join
 from bo_sql_spark.parallel import lineage_cut
 from bo_sql_spark.queries import register
+from bo_sql_spark.scratch import scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -44,6 +45,22 @@ def _cents16(emb: DataFrame) -> DataFrame:
         F.col("vec_id").alias("c_id"),
         F.col("embedding").cast("array<double>").alias("c_vec"),
     )
+
+
+def _cents16_float(emb: DataFrame) -> DataFrame:
+    """The same 16 centroids with ``c_vec`` left as the embedding's own
+    float array: the IVF/PQ families score against it uncast, and a
+    cast to double would change their arithmetic."""
+    return emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+    )
+
+
+def _vec0(emb: DataFrame) -> list[float]:
+    """The vec_id 0 embedding on the driver: the query vector of the
+    single-query ANN entries."""
+    row = emb.filter(F.col("vec_id") == 0).select("embedding").first()
+    return [float(x) for x in row[0]]
 
 
 def _knn16_edges(emb: DataFrame) -> DataFrame:
@@ -235,10 +252,8 @@ def dedup_minhash_pairs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_incremental_minhash_portable(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import tempfile
-
     docs = _t(spark, sf_dir)["documents"]
-    path = tempfile.mkdtemp(prefix="bosql_mhidxp_") + "/index"
+    path = scratch_dir("mhidxp") + "/index"
     D.materialize_minhash_index(
         docs.filter(F.col("doc_id") < 400), path,
         n_hashes=16, bands=8, portable=True,
@@ -1301,10 +1316,7 @@ def _portable_rp_topk_sql_auto(
 def similarity_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    ]
+    qvec = _vec0(emb)
     corpus = emb.filter(F.col("vec_id") != 0)
     n = corpus.count()
     _assert_tier_covered(
@@ -1445,7 +1457,6 @@ def similarity_ann_batch_portable(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def stream_rp_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators.similarity import (
         rp_auto_probe_params,
@@ -1454,16 +1465,13 @@ def stream_rp_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir)["embeddings"]
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    ]
+    qvec = _vec0(emb)
     n = emb.filter(F.col("vec_id") != 0).count()
     _assert_tier_covered(
         n, _RP_PROBE_TIERS, _rp_probe_tier_bounds, "stream_rp_index_ingest"
     )
     bits, seeds, flips, radius = rp_auto_probe_params(n)
-    root = tempfile.mkdtemp(prefix="bosql_rp_stream_")
+    root = scratch_dir("rp_stream")
     store = os.path.join(root, "index")
 
     stream = (
@@ -1514,8 +1522,6 @@ def stream_rp_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "similarity", "approx", "served"),
 )
 def similarity_rp_index_batch_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.operators.similarity import (
         materialize_rp_index,
         rp_auto_probe_params,
@@ -1534,7 +1540,7 @@ def similarity_rp_index_batch_served(spark: SparkSession, sf_dir: str) -> DataFr
         "similarity_rp_index_batch_served",
     )
     bits, seeds, flips, radius = rp_auto_probe_params(n)
-    path = tempfile.mkdtemp(prefix="bosql_rp_bidx_") + "/index"
+    path = scratch_dir("rp_bidx") + "/index"
     materialize_rp_index(corpus, path, dim=64, bits=bits, seeds=seeds)
     return rp_index_topk_batch(
         spark, path, qvecs, k=10, dim=64, flips=flips, radius=radius
@@ -1562,8 +1568,6 @@ def similarity_rp_index_batch_served(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("pipeline", "similarity", "approx", "served"),
 )
 def similarity_rp_index_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.operators.similarity import (
         materialize_rp_index,
         rp_auto_probe_params,
@@ -1571,17 +1575,14 @@ def similarity_rp_index_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir)["embeddings"]
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    ]
+    qvec = _vec0(emb)
     corpus = emb.filter(F.col("vec_id") != 0)
     n = corpus.count()
     _assert_tier_covered(
         n, _RP_PROBE_TIERS, _rp_probe_tier_bounds, "similarity_rp_index_served"
     )
     bits, seeds, flips, radius = rp_auto_probe_params(n)
-    path = tempfile.mkdtemp(prefix="bosql_rp_index_") + "/index"
+    path = scratch_dir("rp_index") + "/index"
     materialize_rp_index(corpus, path, dim=64, bits=bits, seeds=seeds)
     return rp_index_topk(
         spark, path, qvec, k=10, dim=64,
@@ -1636,10 +1637,7 @@ def similarity_rp_index_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ann_recall_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    ]
+    qvec = _vec0(emb)
     corpus = emb.filter(F.col("vec_id") != 0)
     n_corpus = corpus.count()
     _assert_tier_covered(
@@ -1719,9 +1717,7 @@ def similarity_ann_recall_portable(spark: SparkSession, sf_dir: str) -> DataFram
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     assigned = S.ivf_assign(emb, cents)
     qrow = assigned.filter(F.col("vec_id") == 0).select("cell", "embedding").first()
     qcell, qvec = qrow["cell"], [float(x) for x in qrow["embedding"]]
@@ -1857,9 +1853,7 @@ def similarity_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     qvec = [
         float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
@@ -1926,9 +1920,7 @@ def similarity_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivf_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     return S.ivf_train_step(emb, cents)
 
 
@@ -1978,10 +1970,23 @@ def similarity_ivf_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivf_train2(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     return S.ivf_train(emb, cents, iters=2)
+
+
+def _ivf_served_prepare(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, dict[int, tuple[list[float], int]]]:
+    """Materialize the cell-partitioned assignment once; read the two
+    probe vectors (vec_id 0 and 1) and their cells back from it."""
+    emb = _t(spark, sf_dir)["embeddings"]
+    path = scratch_dir("ivf") + "/assignment"
+    S.materialize_ivf_assignment(emb, _cents16_float(emb), path)
+    probes = {
+        int(r["vec_id"]): ([float(x) for x in r["embedding"]], int(r["cell"]))
+        for r in spark.read.parquet(path).filter(F.col("vec_id") < 2).collect()
+    }
+    return path, probes
 
 
 @register(
@@ -2032,33 +2037,27 @@ def similarity_ivf_train2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_scale_ops.py) instead of re-scoring the corpus per "
     "query as ivf_topk's inline path does.",
     tags=("pipeline", "similarity", "approx"),
+    prepare=_ivf_served_prepare,
 )
-def similarity_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    path = tempfile.mkdtemp(prefix="bosql_ivf_") + "/assignment"
-    S.materialize_ivf_assignment(emb, cents, path)
-    assigned = spark.read.parquet(path)
-    parts = []
-    for qid in (0, 1):
-        qrow = assigned.filter(F.col("vec_id") == qid).first()
-        qvec = [float(x) for x in qrow["embedding"]]
-        parts.append(
-            S.ivf_topk_served(
-                spark,
-                path,
-                qvec,
-                query_cells=[qrow["cell"]],
-                k=10,
-                exclude_id=qid,
-            ).select(F.lit(qid).cast("long").alias("query_id"), "vec_id", "cos_sim")
-        )
+def similarity_ivf_served(
+    spark: SparkSession, sf_dir: str, state: tuple
+) -> DataFrame:
+    path, probes = state
+    parts = [
+        S.ivf_topk_served(
+            spark, path, qvec, query_cells=[cell], k=10, exclude_id=qid
+        ).select(F.lit(qid).cast("long").alias("query_id"), "vec_id", "cos_sim")
+        for qid, (qvec, cell) in sorted(probes.items())
+    ]
     return parts[0].unionAll(parts[1])
+
+
+def _ivf_batch_served_prepare(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the cell-partitioned assignment once; its path."""
+    emb = _t(spark, sf_dir)["embeddings"]
+    path = scratch_dir("ivf_batch") + "/assignment"
+    S.materialize_ivf_assignment(emb, _cents16_float(emb), path)
+    return path
 
 
 @register(
@@ -2111,21 +2110,17 @@ def similarity_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     "directions at 100 TB: corpus (partition-pruned scan) and query "
     "count (everything partitions by qid or cell, nothing serial).",
     tags=("pipeline", "similarity", "approx"),
+    prepare=_ivf_batch_served_prepare,
 )
-def similarity_ivf_batch_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
+def similarity_ivf_batch_served(
+    spark: SparkSession, sf_dir: str, path: str
+) -> DataFrame:
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    path = tempfile.mkdtemp(prefix="bosql_ivf_batch_") + "/assignment"
-    S.materialize_ivf_assignment(emb, cents, path)
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     return S.ivf_batch_topk_served(
-        spark, path, queries, cents, n_probe=2, k=10
+        spark, path, queries, _cents16_float(emb), n_probe=2, k=10
     )
 
 
@@ -2198,9 +2193,7 @@ def similarity_ivf_train_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     emb = t["embeddings"]
-    cents0 = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents0 = _cents16_float(emb)
     trained = S.ivf_train(emb, cents0, iters=2)
     cents2 = trained.select(
         F.col("cell").alias("c_id"), F.col("centroid").alias("c_vec")
@@ -2759,11 +2752,10 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_pointers(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     t = _t(spark, sf_dir)
     blobs = M.make_fake_blob_df(t["documents"])
-    base = tempfile.mkdtemp(prefix="bosql_media_")
+    base = scratch_dir("media")
     store = os.path.join(base, "store")
     os.makedirs(store, exist_ok=True)
     ptr_path = os.path.join(base, "pointers")
@@ -2821,15 +2813,13 @@ def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "rollup", "events"),
 )
 def rollup_daily_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.operators.rollup_mat import (
         daily_from_hourly,
         materialize_hourly_rollup,
     )
 
     t = _t(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="bosql_rollup_") + "/hourly"
+    path = scratch_dir("rollup") + "/hourly"
     materialize_hourly_rollup(t["events"], path)
     daily = daily_from_hourly(spark, path)
     return daily.select(
@@ -2866,8 +2856,6 @@ def rollup_daily_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "rollup", "events"),
 )
 def rollup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.operators.rollup_mat import (
         daily_from_hourly,
         materialize_hourly_rollup,
@@ -2875,7 +2863,7 @@ def rollup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = _t(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="bosql_rollup_inc_") + "/hourly"
+    path = scratch_dir("rollup_inc") + "/hourly"
     materialize_hourly_rollup(t["events"].filter(F.col("event_id") % 2 == 0), path)
     refresh_hourly_rollup(
         spark, t["events"].filter(F.col("event_id") % 2 == 1), path
@@ -3264,12 +3252,11 @@ def sketch_quantile_sampled_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators import heavy_hitters as HH
 
     li = _t(spark, sf_dir)["lineitem"]
-    root = tempfile.mkdtemp(prefix="bosql_q_stream_")
+    root = scratch_dir("q_stream")
     store = os.path.join(root, "sample")
 
     stream = (
@@ -3959,7 +3946,6 @@ def drift_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_drift_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators.drift import (
         centroid_cosines_from_sums,
@@ -3967,7 +3953,7 @@ def stream_drift_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     emb_schema = _t(spark, sf_dir)["embeddings"].schema
-    root = tempfile.mkdtemp(prefix="bosql_embdrift_stream_")
+    root = scratch_dir("embdrift_stream")
     store = os.path.join(root, "sums")
 
     stream = (
@@ -4209,10 +4195,9 @@ def _ingest_drift_counts_stream(spark: SparkSession, sf_dir: str) -> str:
     (category, n_a, n_b) counts — the mergeable summary — to a fresh
     store. Returns the store path."""
     import os
-    import tempfile
 
     ev_schema = _t(spark, sf_dir)["events"].schema
-    root = tempfile.mkdtemp(prefix="bosql_drift_stream_")
+    root = scratch_dir("drift_stream")
     store = os.path.join(root, "counts")
 
     stream = (
@@ -4508,10 +4493,9 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     ev_schema = _t(spark, sf_dir)["events"].schema
-    root = tempfile.mkdtemp(prefix="bosql_mad_stream_")
+    root = scratch_dir("mad_stream")
     store = os.path.join(root, "counts")
 
     stream = (
@@ -4994,12 +4978,11 @@ def _entropy_filter_from_tf(tf: DataFrame) -> DataFrame:
 )
 def stream_corpus_filter_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators.text import doc_term_freq
 
     docs_schema = _t(spark, sf_dir)["documents"].schema
-    root = tempfile.mkdtemp(prefix="bosql_entfilter_stream_")
+    root = scratch_dir("entfilter_stream")
     store = os.path.join(root, "tf")
 
     stream = (
@@ -5187,12 +5170,11 @@ def _stream_lm_decisions_store(spark: SparkSession, sf_dir: str) -> str:
     the corpus, appends per-microbatch decisions; returns the
     decisions store path."""
     import os
-    import tempfile
 
     from bo_sql_spark.operators.text import doc_term_freq, lm_fit
 
     docs = _t(spark, sf_dir)["documents"]
-    root = tempfile.mkdtemp(prefix="bosql_lmserve_stream_")
+    root = scratch_dir("lmserve_stream")
     # TRAIN: freeze model + threshold to the store, once
     model_tf = lineage_cut(
         doc_term_freq(docs.filter(F.expr("doc_id % 10 != 0")))
@@ -5370,13 +5352,11 @@ def _lm_swap_oracle() -> str:
     tags=("pipeline", "text", "filter", "store", "stats"),
 )
 def store_lm_model_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.operators.text import doc_term_freq, lm_fit
     from bo_sql_spark.sinks import snapshot_read, snapshot_write_cas
 
     docs = _t(spark, sf_dir)["documents"]
-    root = tempfile.mkdtemp(prefix="bosql_lm_swap_") + "/model"
+    root = scratch_dir("lm_swap") + "/model"
 
     def train(model_pred: str) -> DataFrame:
         terms, total, mean = lm_fit(
@@ -5496,19 +5476,15 @@ def _ivf_swap_oracle() -> str:
     tags=("pipeline", "similarity", "approx", "store"),
 )
 def store_ivf_model_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.sinks import snapshot_read, snapshot_write_cas
 
     emb = _t(spark, sf_dir)["embeddings"]
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    seeds = vecs.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    seeds = _cents16_float(vecs)
     corpus = vecs.filter(F.expr("vec_id % 10 != 0"))
-    root = tempfile.mkdtemp(prefix="bosql_ivf_swap_") + "/index"
+    root = scratch_dir("ivf_swap") + "/index"
 
     def train(pred: str) -> DataFrame:
         step = S.ivf_train_step(vecs.filter(F.expr(pred)), seeds)
@@ -5662,6 +5638,16 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEARCH_TERMS = ("dup", "merge", "vector")
 
 
+def _postings_prepare(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the term-bucket-partitioned postings index of the
+    corpus once; its path."""
+    from bo_sql_spark.operators.search import materialize_inverted_index
+
+    path = scratch_dir("invidx") + "/index"
+    materialize_inverted_index(_t(spark, sf_dir)["documents"], path)
+    return path
+
+
 @register(
     "text_keyword_search",
     oracle=f"""
@@ -5726,18 +5712,11 @@ def text_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rescanning text. Hash bucketing keeps directory count fixed and "
     "spreads hot terms within a bucket.",
     tags=("pipeline", "text", "search"),
+    prepare=_postings_prepare,
 )
-def text_search_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+def text_search_served(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    from bo_sql_spark.operators.search import search_served
 
-    from bo_sql_spark.operators.search import (
-        materialize_inverted_index,
-        search_served,
-    )
-
-    docs = _t(spark, sf_dir)["documents"]
-    path = tempfile.mkdtemp(prefix="bosql_invidx_") + "/index"
-    materialize_inverted_index(docs, path)
     return search_served(spark, path, list(_SEARCH_TERMS))
 
 
@@ -5813,12 +5792,10 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "store"),
 )
 def store_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.sinks import snapshot_read, snapshot_write_cas
 
     docs = _t(spark, sf_dir)["documents"].select("doc_id", "n_chars")
-    root = tempfile.mkdtemp(prefix="bosql_snap_") + "/tbl"
+    root = scratch_dir("snap") + "/tbl"
     v1 = snapshot_write_cas(spark, docs.filter(F.col("doc_id") % 2 == 0), root)
     v2 = snapshot_write_cas(spark, docs, root)
 
@@ -5886,8 +5863,6 @@ def store_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "store"),
 )
 def store_snapshot_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark import fsutil
     from bo_sql_spark.sinks import (
         _COMMITS_DIR,
@@ -5898,7 +5873,7 @@ def store_snapshot_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     docs = _t(spark, sf_dir)["documents"].select("doc_id", "n_chars")
-    root = tempfile.mkdtemp(prefix="bosql_vac_") + "/tbl"
+    root = scratch_dir("vac") + "/tbl"
     snapshot_write_cas(spark, docs.filter(F.col("doc_id") % 3 == 0), root)
     snapshot_write_cas(spark, docs.filter(F.col("doc_id") % 2 == 0), root)
     snapshot_write_cas(spark, docs, root)
@@ -5968,8 +5943,6 @@ def store_snapshot_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("pipeline", "store"),
 )
 def store_snapshot_retention_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.sinks import (
         snapshot_read,
         snapshot_vacuum,
@@ -5977,7 +5950,7 @@ def store_snapshot_retention_horizon(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     docs = _t(spark, sf_dir)["documents"].select("doc_id", "n_chars")
-    root = tempfile.mkdtemp(prefix="bosql_ret_") + "/tbl"
+    root = scratch_dir("ret") + "/tbl"
     snapshot_write_cas(spark, docs.filter(F.col("doc_id") % 5 == 0), root)
     snapshot_write_cas(spark, docs.filter(F.col("doc_id") % 3 == 0), root)
     snapshot_write_cas(spark, docs.filter(F.col("doc_id") % 2 == 0), root)
@@ -6075,15 +6048,13 @@ def text_proximity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "text", "search"),
 )
 def text_phrase_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.operators.search import (
         materialize_inverted_index,
         phrase_served,
     )
 
     docs = _t(spark, sf_dir)["documents"]
-    path = tempfile.mkdtemp(prefix="bosql_posidx_") + "/index"
+    path = scratch_dir("posidx") + "/index"
     materialize_inverted_index(docs, path)
     return phrase_served(spark, path, ["hash", "join"])
 
@@ -6101,15 +6072,13 @@ def text_phrase_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "text", "search"),
 )
 def text_proximity_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.operators.search import (
         materialize_inverted_index,
         proximity_served,
     )
 
     docs = _t(spark, sf_dir)["documents"]
-    path = tempfile.mkdtemp(prefix="bosql_posidx_") + "/index"
+    path = scratch_dir("posidx") + "/index"
     materialize_inverted_index(docs, path)
     return proximity_served(spark, path, ["dup", "vector"], window=12)
 
@@ -6251,18 +6220,11 @@ def text_bm25_topdocs_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     "entry runs against text_bm25_topdocs' oracle VERBATIM — the "
     "strongest served-equals-batch statement the registry can make.",
     tags=("pipeline", "text", "search"),
+    prepare=_postings_prepare,
 )
-def text_bm25_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+def text_bm25_served(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    from bo_sql_spark.operators.search import bm25_served
 
-    from bo_sql_spark.operators.search import (
-        bm25_served,
-        materialize_inverted_index,
-    )
-
-    docs = _t(spark, sf_dir)["documents"]
-    path = tempfile.mkdtemp(prefix="bosql_bm25idx_") + "/index"
-    materialize_inverted_index(docs, path)
     return bm25_served(spark, path, list(_SEARCH_TERMS), k=20)
 
 
@@ -6290,12 +6252,11 @@ def _ingest_postings_stream(
     microbatch appending its postings to a fresh term-bucket-
     partitioned store. Returns the store path."""
     import os
-    import tempfile
 
     from bo_sql_spark.operators.search import append_postings
 
     docs_schema = _t(spark, sf_dir)["documents"].schema
-    root = tempfile.mkdtemp(prefix="bosql_idx_stream_")
+    root = scratch_dir("idx_stream")
     store = os.path.join(root, "index")
 
     stream = (
@@ -6487,8 +6448,6 @@ def _hybrid_rrf_served_oracle() -> str:
     tags=("pipeline", "text", "search", "similarity"),
 )
 def search_hybrid_rrf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
 
     from bo_sql_spark.operators.search import (
@@ -6498,17 +6457,15 @@ def search_hybrid_rrf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     docs, emb = t["documents"], t["embeddings"]
-    ipath = tempfile.mkdtemp(prefix="bosql_hyb_idx_") + "/index"
+    ipath = scratch_dir("hyb_idx") + "/index"
     materialize_inverted_index(docs, ipath)
     lex = bm25_served(spark, ipath, list(_SEARCH_TERMS), k=50)
     wl = Window.orderBy(F.col("bm25_micros").desc(), "doc_id")
     lex_r = lex.select(
         "doc_id", F.row_number().over(wl).cast("long").alias("bm25_rank")
     )
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    apath = tempfile.mkdtemp(prefix="bosql_hyb_ivf_") + "/assignment"
+    cents = _cents16_float(emb)
+    apath = scratch_dir("hyb_ivf") + "/assignment"
     S.materialize_ivf_assignment(emb, cents, apath)
     assigned = spark.read.parquet(apath)
     qrow = assigned.filter(F.col("vec_id") == 0).first()
@@ -6891,8 +6848,6 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "source"),
 )
 def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.sources import load_jsonl, write_jsonl
 
     t = _t(spark, sf_dir)
@@ -6906,7 +6861,7 @@ def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "yyyy-MM-dd",
         ),
     )
-    path = tempfile.mkdtemp(prefix="bosql_jsonl_") + "/docs"
+    path = scratch_dir("jsonl") + "/docs"
     write_jsonl(staged, path)
     loaded = load_jsonl(spark, path)
     # The contract under test: the written yyyy-MM-dd STRING came back a
@@ -7604,9 +7559,25 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     m, dsub = 8, 8
     cb = S.pq_codebooks_from_seeds(emb, m=m, dsub=dsub, ks=16)
     codes = S.pq_encode(emb, cb, m=m, dsub=dsub)
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    qvec = [float(x) for x in qrow["embedding"]]
+    qvec = _vec0(emb)
     return S.pq_adc_topk(codes, cb, qvec, m=m, dsub=dsub, k=10)
+
+
+def _pq_store(codes: DataFrame, codebooks: DataFrame, name: str) -> str:
+    """Persist encoded vectors and their codebooks under one new
+    scratch directory; its path."""
+    base = scratch_dir(name)
+    codes.write.mode("overwrite").parquet(base + "/codes")
+    codebooks.write.mode("overwrite").parquet(base + "/codebooks")
+    return base
+
+
+def _ivfpq_adc_prepare(spark: SparkSession, sf_dir: str) -> tuple[str, list[float]]:
+    """Encode the corpus (cells + residual PQ codes) and the residual
+    codebooks once; the store and the query vector."""
+    emb = _t(spark, sf_dir)["embeddings"]
+    encoded, cb = S.ivfpq_encode(emb, _cents16_float(emb), m=8, dsub=8, ks=16)
+    return _pq_store(encoded, cb, "ivfpq"), _vec0(emb)
 
 
 @register(
@@ -7679,20 +7650,21 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast joins, no driver collect); LUT partials are exact "
     "fixed-point micros. The oracle replays assignment, residuals, "
     "residual codebooks, encode argmin, probe choice, per-cell LUT, "
-    "and the ADC sum. 64-d embeddings, m=8 subspaces of 8 dims.",
+    "and the ADC sum. 64-d embeddings, m=8 subspaces of 8 dims. The "
+    "encode runs once to stored codes and codebooks; each query reads "
+    "them back.",
     tags=("pipeline", "similarity", "approx"),
+    prepare=_ivfpq_adc_prepare,
 )
-def similarity_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+def similarity_ivfpq_adc(spark: SparkSession, sf_dir: str, state: tuple) -> DataFrame:
+    base, qvec = state
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    m, dsub = 8, 8
-    encoded, cb = S.ivfpq_encode(emb, cents, m=m, dsub=dsub, ks=16)
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    qvec = [float(x) for x in qrow["embedding"]]
     return S.ivfpq_adc_topk(
-        encoded, cb, cents, qvec, m=m, dsub=dsub, n_probe=2, k=10
+        spark.read.parquet(base + "/codes"),
+        spark.read.parquet(base + "/codebooks"),
+        _cents16_float(emb),
+        qvec,
+        m=8, dsub=8, n_probe=2, k=10,
     )
 
 
@@ -7792,15 +7764,12 @@ def similarity_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     m, dsub = 8, 8
     encoded, cb = S.ivfpq_encode(
         emb, cents, m=m, dsub=dsub, ks=16, train_steps=1
     )
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    qvec = [float(x) for x in qrow["embedding"]]
+    qvec = _vec0(emb)
     return S.ivfpq_adc_topk(
         encoded, cb, cents, qvec, m=m, dsub=dsub, n_probe=2, k=10
     )
@@ -7887,14 +7856,10 @@ def similarity_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "similarity", "approx"),
 )
 def similarity_ivfpq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     m, dsub = 8, 8
-    base = tempfile.mkdtemp(prefix="bosql_ivfpq_idx_")
+    base = scratch_dir("ivfpq_idx")
     S.materialize_ivfpq_index(emb, cents, base, m=m, dsub=dsub, ks=16)
     parts = []
     for qid in (0, 1):
@@ -7995,15 +7960,11 @@ def decontaminate_overlap_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "similarity", "approx"),
 )
 def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     base = emb.filter(F.col("vec_id") >= 50)
     batch = emb.filter(F.col("vec_id") < 50)
-    path = tempfile.mkdtemp(prefix="bosql_ivf_incr_") + "/assignment"
+    path = scratch_dir("ivf_incr") + "/assignment"
     S.materialize_ivf_assignment(base, cents, path)
     S.append_ivf_assignment(batch, cents, path)
     assigned = spark.read.parquet(path)
@@ -8056,13 +8017,10 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_ivf_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     emb_batch = _t(spark, sf_dir)["embeddings"]
-    cents = emb_batch.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    path = tempfile.mkdtemp(prefix="bosql_ivf_stream_") + "/assignment"
+    cents = _cents16_float(emb_batch)
+    path = scratch_dir("ivf_stream") + "/assignment"
 
     stream = (
         spark.readStream.schema(emb_batch.schema)
@@ -8157,21 +8115,30 @@ _PQ_TRAINED_ORACLE = """
     """
 
 
-def _pq_trained(spark: SparkSession, sf_dir: str, ks: int) -> DataFrame:
-    emb = _t(spark, sf_dir)["embeddings"]
-    m, dsub = 8, 8
-    cb0 = S.pq_codebooks_from_seeds(emb, m=m, dsub=dsub, ks=ks)
+def _pq_trained_codes(emb: DataFrame, ks: int) -> tuple[DataFrame, DataFrame]:
+    """(codes, trained codebook) of flat PQ with m=8 subspaces of 8
+    dims: seed codebooks take one Lloyd step, then the corpus is
+    encoded with the trained books."""
+    cb0 = S.pq_codebooks_from_seeds(emb, m=8, dsub=8, ks=ks)
     # checkpoint the trained codebook: it is consumed THREE times
-    # (driver arrays for the arrow encode, the ADC lookup table, and
-    # its own derivation) and is broadcast-sized by construction
+    # (driver arrays for the arrow encode, the ADC lookup table or the
+    # store, and its own derivation) and is broadcast-sized by
+    # construction
     cb1 = lineage_cut(
-        S.pq_train_step(emb, cb0, m=m, dsub=dsub).select("sub", "code", "c_vec"),
+        S.pq_train_step(emb, cb0, m=8, dsub=8).select("sub", "code", "c_vec"),
         eager=True,
     )
-    codes = S.pq_encode(emb, cb1, m=m, dsub=dsub)
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    qvec = [float(x) for x in qrow["embedding"]]
-    return S.pq_adc_topk(codes, cb1, qvec, m=m, dsub=dsub, k=10)
+    return S.pq_encode(emb, cb1, m=8, dsub=8), cb1
+
+
+def _pq_trained256_prepare(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, list[float]]:
+    """Train the ks=256 codebooks and encode the corpus once; the store
+    and the query vector."""
+    emb = _t(spark, sf_dir)["embeddings"]
+    codes, cb = _pq_trained_codes(emb, ks=256)
+    return _pq_store(codes, cb, "pq256"), _vec0(emb)
 
 
 @register(
@@ -8189,15 +8156,18 @@ def _pq_trained(spark: SparkSession, sf_dir: str, ks: int) -> DataFrame:
     tags=("pipeline", "similarity", "training", "approx"),
 )
 def similarity_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pq_trained(spark, sf_dir, ks=16)
+    emb = _t(spark, sf_dir)["embeddings"]
+    codes, cb = _pq_trained_codes(emb, ks=16)
+    return S.pq_adc_topk(codes, cb, _vec0(emb), m=8, dsub=8, k=10)
 
 
 @register(
     "similarity_pq_trained256",
     oracle=_PQ_TRAINED_ORACLE.replace("__KS__", "256"),
-    doc="Standard 8-bit PQ: the same one-plan Lloyd train -> encode -> "
-    "ADC pipeline as similarity_pq_trained but at ks=256 codewords per "
-    "subspace — the config every production PQ index uses and the one "
+    doc="Standard 8-bit PQ, served: the same Lloyd train -> encode as "
+    "similarity_pq_trained but at ks=256 codewords per subspace, run "
+    "once to a stored (codes, codebooks) pair that each query answers "
+    "from by ADC — the config every production PQ index uses and the one "
     "the recall table grades (recall@10 0.40 at ks=256 vs 0.14 at "
     "ks=16 on the sf0.1 fixture, SCALE.md; floor asserted in "
     "tests/test_scale_ops.py). Codebooks stay broadcast-sized (m * ks "
@@ -8205,9 +8175,18 @@ def similarity_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     "— the argmin fan-out is ks per (vec, sub), still map-side against "
     "a broadcast table, so the plan scales exactly like ks=16.",
     tags=("pipeline", "similarity", "training", "approx"),
+    prepare=_pq_trained256_prepare,
 )
-def similarity_pq_trained256(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pq_trained(spark, sf_dir, ks=256)
+def similarity_pq_trained256(
+    spark: SparkSession, sf_dir: str, state: tuple
+) -> DataFrame:
+    base, qvec = state
+    return S.pq_adc_topk(
+        spark.read.parquet(base + "/codes"),
+        spark.read.parquet(base + "/codebooks"),
+        qvec,
+        m=8, dsub=8, k=10,
+    )
 
 
 def _opq_oracle() -> str:
@@ -8368,9 +8347,7 @@ def similarity_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     aug = emb.unionAll(planted)
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     g = S.knn_graph(aug, cents, k=5)
     edges = g.filter(F.col("cos_sim") >= 0.95).select(
         F.col("vec_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
@@ -8416,8 +8393,7 @@ def similarity_opq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True,
     )
     codes = S.pq_encode(rot, cb1, m=m, dsub=dsub)
-    qrow = rot.filter(F.col("vec_id") == 0).select("embedding").first()
-    qvec = [float(x) for x in qrow["embedding"]]
+    qvec = _vec0(rot)
     return S.pq_adc_topk(codes, cb1, qvec, m=m, dsub=dsub, k=10)
 
 
@@ -8526,9 +8502,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     aug = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")).unionAll(planted)
-    cents = aug.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(aug)
     return D.semantic_dedup(aug, cents, threshold=0.95)
 
 
@@ -8604,9 +8578,7 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
     aug = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).unionAll(planted)
-    cents = aug.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(aug)
     pairs = D.semantic_pair_cosines(aug, cents)
     grid = spark.createDataFrame(
         [(t,) for t in (300, 350, 400, 450, 500, 950, 990)],
@@ -9093,9 +9065,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     batch = emb.filter(F.col("vec_id") >= 400).unionAll(planted)
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    cents = _cents16_float(emb)
     corpus_assigned = S.ivf_assign(corpus, cents)
     return D.semantic_dedup_incremental(
         corpus_assigned, batch, cents, threshold=0.95
@@ -9347,12 +9317,11 @@ def text_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators.heavy_hitters import misra_gries_candidates
 
     events = _t(spark, sf_dir)["events"]
-    root = tempfile.mkdtemp(prefix="bosql_hh_stream_")
+    root = scratch_dir("hh_stream")
     store = os.path.join(root, "candidates")
 
     stream = (
@@ -9502,10 +9471,8 @@ def dedup_survivors_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "source"),
 )
 def orc_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     t = _t(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="bosql_orc_") + "/docs"
+    path = scratch_dir("orc") + "/docs"
     t["documents"].write.mode("overwrite").partitionBy("lang").orc(path)
     loaded = spark.read.orc(path)
     return loaded.groupBy("lang").agg(
@@ -9640,13 +9607,12 @@ def sketch_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.functions import word_shingles
     from bo_sql_spark.operators import bloom as B
 
     doc_schema = _t(spark, sf_dir)["documents"].schema
-    root = tempfile.mkdtemp(prefix="bosql_bloom_stream_")
+    root = scratch_dir("bloom_stream")
     store = os.path.join(root, "words")
 
     stream = (
@@ -9806,13 +9772,12 @@ def sketch_count_min_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.functions import tokens
     from bo_sql_spark.operators import heavy_hitters as HH
 
     docs = _t(spark, sf_dir)["documents"]
-    root = tempfile.mkdtemp(prefix="bosql_cm_stream_")
+    root = scratch_dir("cm_stream")
     store = os.path.join(root, "grids")
 
     stream = (
@@ -10113,12 +10078,11 @@ def sketch_hll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators import heavy_hitters as HH
 
     li = _t(spark, sf_dir)["lineitem"]
-    root = tempfile.mkdtemp(prefix="bosql_hll_stream_")
+    root = scratch_dir("hll_stream")
     store = os.path.join(root, "registers")
 
     stream = (
@@ -10276,6 +10240,16 @@ def zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivfsq_served_prepare(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame]:
+    """Materialize the cell-partitioned 8-bit code store once; its path
+    and the one-row stats codebook the serve broadcasts."""
+    emb = _t(spark, sf_dir)["embeddings"]
+    path = scratch_dir("ivfsq") + "/index"
+    return path, S.materialize_ivfsq_index(emb, _cents16_float(emb), path)
+
+
 @register(
     "similarity_ivfsq_served",
     oracle="""
@@ -10323,16 +10297,12 @@ def zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "assignment recompute, no driver collect. Completes the index "
     "matrix: {Flat, SQ8, PQ} x {one-shot, materialized-served}.",
     tags=("pipeline", "similarity", "approx"),
+    prepare=_ivfsq_served_prepare,
 )
-def similarity_ivfsq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    emb = _t(spark, sf_dir)["embeddings"]
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    path = tempfile.mkdtemp(prefix="bosql_ivfsq_") + "/index"
-    stats = S.materialize_ivfsq_index(emb, cents, path)
+def similarity_ivfsq_served(
+    spark: SparkSession, sf_dir: str, state: tuple
+) -> DataFrame:
+    path, stats = state
     store = spark.read.parquet(path)
     qrow = store.filter(F.col("vec_id") == 0)
     serve = store.join(
@@ -10389,11 +10359,10 @@ def similarity_ivfsq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_semantic_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     emb_batch = _t(spark, sf_dir)["embeddings"]
     cents = _cents16(emb_batch)
-    root = tempfile.mkdtemp(prefix="bosql_semdedup_stream_")
+    root = scratch_dir("semdedup_stream")
     store = os.path.join(root, "assignment")
     survivors = os.path.join(root, "survivors")
 
@@ -10523,15 +10492,11 @@ def dedup_semantic_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "similarity", "approx"),
 )
 def similarity_sq8_batch_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     emb = _t(spark, sf_dir)["embeddings"].select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    path = tempfile.mkdtemp(prefix="bosql_ivfsq_batch_") + "/index"
+    cents = _cents16_float(emb)
+    path = scratch_dir("ivfsq_batch") + "/index"
     stats = S.materialize_ivfsq_index(emb, cents, path)
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
@@ -10953,11 +10918,10 @@ def dedup_duplicate_spans_winnowed(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     docs_batch = _t(spark, sf_dir)["documents"]
     evalset = docs_batch.filter(F.col("doc_id") % 25 == 0)
-    root = tempfile.mkdtemp(prefix="bosql_decontam_stream_")
+    root = scratch_dir("decontam_stream")
     out = os.path.join(root, "clean")
 
     stream = (
@@ -11235,13 +11199,12 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_kmv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.functions import word_shingles
     from bo_sql_spark.operators import kmv as K
 
     doc_schema = _t(spark, sf_dir)["documents"].schema
-    root = tempfile.mkdtemp(prefix="bosql_kmv_stream_")
+    root = scratch_dir("kmv_stream")
     store = os.path.join(root, "sketch")
 
     stream = (
@@ -11614,12 +11577,11 @@ def drift_user_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_drift_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from bo_sql_spark.operators import kmv as K
 
     ev_schema = _t(spark, sf_dir)["events"].schema
-    root = tempfile.mkdtemp(prefix="bosql_useroverlap_stream_")
+    root = scratch_dir("useroverlap_stream")
     store = os.path.join(root, "sketches")
 
     stream = (

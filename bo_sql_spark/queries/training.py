@@ -19,6 +19,7 @@ from bo_sql_spark.operators import sampling as SA
 from bo_sql_spark.operators.sampling import PORTABLE_PRIME, portable_hash_sql
 from bo_sql_spark.parallel import lineage_cut
 from bo_sql_spark.queries import register
+from bo_sql_spark.scratch import scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str):
@@ -713,8 +714,6 @@ def _e2e_v2_oracle() -> str:
     tags=("pipeline", "training", "dedup", "filter", "store", "composite"),
 )
 def training_pipeline_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bo_sql_spark.functions import tokens
     from bo_sql_spark.operators import corpus_filters as CF
     from bo_sql_spark.operators import dedup as D
@@ -750,7 +749,7 @@ def training_pipeline_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carry the committed version (deterministically 1: fresh store)
     tf = lineage_cut(doc_term_freq(gkeep))
     terms, total, mean = lm_fit(tf)
-    root = tempfile.mkdtemp(prefix="bosql_e2e_v2_") + "/model"
+    root = scratch_dir("e2e_v2") + "/model"
     v = snapshot_write_cas(
         spark,
         terms.crossJoin(F.broadcast(total.select("_lnNV"))).crossJoin(
@@ -986,10 +985,9 @@ def sample_weighted_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     doc_schema = _t(spark, sf_dir)["documents"].schema
-    root = tempfile.mkdtemp(prefix="bosql_wres_stream_")
+    root = scratch_dir("wres_stream")
     store = os.path.join(root, "candidates")
 
     stream = (

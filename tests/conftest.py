@@ -11,13 +11,15 @@ def _compile_fs_double() -> str | None:
     """Compile the Hadoop FileSystem test double (tests/java/) into a
     temp classes dir for spark.driver.extraClassPath, so the CAS
     scheme-matrix contract test can register an s3a-like scheme whose
-    class is visible to every thread of the local-mode JVM. Returns
+    class is visible to every thread of the local-mode JVM (in the
+    scratch root, removed when the test process exits). Returns
     None (and the dependent test skips with a reason) when no JDK or
     hadoop jar is available."""
     import glob
     import shutil
     import subprocess
-    import tempfile
+
+    from bo_sql_spark.scratch import scratch_dir
 
     javac = shutil.which("javac")
     if not javac:
@@ -35,7 +37,7 @@ def _compile_fs_double() -> str | None:
         )
         if not jars or not os.path.exists(src):
             return None
-        out = tempfile.mkdtemp(prefix="bosql_fs_double_")
+        out = scratch_dir("fs_double")
         subprocess.run(
             [javac, "-cp", jars[0], "-d", out, src],
             check=True,

@@ -205,7 +205,9 @@ def test_load_parquet_single_file_fires_no_jobs(fresh, sf_dir, tmp_path):
 
 
 def test_package_zip_built_once_and_removed_at_exit(spark):
-    pattern = os.path.join(tempfile.gettempdir(), "bo_sql_spark_pkg_*.zip")
+    pattern = os.path.join(
+        tempfile.gettempdir(), "bosql_*", "pkg_*", "bo_sql_spark_pkg.zip"
+    )
     before = set(glob.glob(pattern))
     first = catalog._package_zip()
     catalog._ship_package_to_workers(spark.newSession())

@@ -279,8 +279,19 @@ def test_pq_adc_plan(spark, sf_dir):
 def test_ivfpq_adc_plan(spark, sf_dir):
     """IVF-PQ must stay broadcast-only: no cartesian, no sort-merge
     join (the encode carries the cell through its aggregations instead
-    of rejoining codes with the assignment corpus-wide)."""
-    df = _df(spark, sf_dir, "similarity_ivfpq_adc")
+    of rejoining codes with the assignment corpus-wide). The registry
+    entry serves from stored codes, so the one-shot encode -> ADC plan
+    is built here from the same operator calls its prepare step makes."""
+    from bo_sql_spark.catalog import load_tables
+    from bo_sql_spark.operators import similarity as S
+    from bo_sql_spark.queries.pipeline import _cents16_float, _vec0
+
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    cents = _cents16_float(emb)
+    encoded, cb = S.ivfpq_encode(emb, cents, m=8, dsub=8, ks=16)
+    df = S.ivfpq_adc_topk(
+        encoded, cb, cents, _vec0(emb), m=8, dsub=8, n_probe=2, k=10
+    )
     text = explain_str(df, "simple")
     assert "CartesianProduct" not in text, text
     assert "SortMergeJoin" not in text, text
@@ -496,9 +507,17 @@ def test_opq_rotation_stays_in_scan_stage(spark, sf_dir):
     """The OPQ rotation must be a pure expression over the scan — a
     single nested Literal matrix applied by higher-order functions:
     no Python stage, no extra exchange versus the unrotated trained-PQ
-    plan (the rotate is free of shuffle by construction)."""
+    plan (the rotate is free of shuffle by construction). The
+    unrotated one-shot train -> encode -> ADC plan at ks=256 is built
+    from the step similarity_pq_trained256 prepares its store with."""
+    from bo_sql_spark.catalog import load_tables
+    from bo_sql_spark.operators import similarity as S
+    from bo_sql_spark.queries.pipeline import _pq_trained_codes, _vec0
+
     rot_df = _df(spark, sf_dir, "similarity_opq_adc")
-    base_df = _df(spark, sf_dir, "similarity_pq_trained256")
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    codes, cb = _pq_trained_codes(emb, ks=256)
+    base_df = S.pq_adc_topk(codes, cb, _vec0(emb), m=8, dsub=8, k=10)
     rot_text = explain_str(rot_df, "simple")
     assert "BatchEvalPython" not in rot_text
     assert rot_text.count("Exchange") == explain_str(base_df, "simple").count(
@@ -583,6 +602,23 @@ def test_plan_lint_flags_undocumented_bounded_window():
     for name, (n, why, ceiling) in BOUNDED_GLOBAL_WINDOWS.items():
         assert n >= 1 and why.strip(), name
         assert ceiling is None or ceiling >= 1, name
+
+
+def test_plan_lint_info_lines_carry_no_expression_ids():
+    """Two builds of one plan differ only in their expression ids; the
+    lint's INFO lines must read the same for both, so two lint runs of
+    one tree can be compared with diff."""
+    from tools_plan_lint import bounded_window_info
+
+    a = ("Window [row_number() windowspecdefinition(n#160L DESC NULLS LAST,"
+         " specifiedwindowframe(RowFrame, unboundedpreceding$(),"
+         " currentrow$())) AS rn#171], [n#160L DESC NULLS LAST]")
+    b = a.replace("#160L", "#164L").replace("#171", "#175")
+    assert a != b
+    assert bounded_window_info("corpus_zipf_slope", a) == bounded_window_info(
+        "corpus_zipf_slope", b
+    )
+    assert "#" not in bounded_window_info("corpus_zipf_slope", a)
 
 
 def test_plan_baseline_diff_catches_seeded_regression():

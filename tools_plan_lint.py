@@ -347,6 +347,19 @@ def plan_signature(plan: str) -> dict[str, int]:
     }
 
 
+_EXPR_ID_RE = re.compile(r"#\d+")
+
+
+def bounded_window_info(name: str, line: str) -> str:
+    """The INFO line for one bounded post-aggregation global window.
+    Expression ids (``#123``) are stripped from the plan text: the
+    session allocates them across every plan it builds, so two runs
+    of one tree would otherwise print different lines."""
+    why = BOUNDED_GLOBAL_WINDOWS.get(name, (0, "UNDOCUMENTED", None))[1]
+    text = _EXPR_ID_RE.sub("", line[:100])
+    return f"INFO {name}: post-aggregation global window (bounded: {why}): {text}"
+
+
 BASELINE_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "PLAN_BASELINE.json"
 )
@@ -415,11 +428,7 @@ def main(argv: list[str]) -> int:
         for line, agg_below in global_windows(plan):
             if agg_below:
                 n_bounded += 1
-                why = BOUNDED_GLOBAL_WINDOWS.get(name, (0, "UNDOCUMENTED", None))[1]
-                print(
-                    f"INFO {name}: post-aggregation global window"
-                    f" (bounded: {why}): {line[:100]}"
-                )
+                print(bounded_window_info(name, line))
         whitelisted += n_bounded
         for f in undocumented_window_flags(name, n_bounded):
             flags.setdefault(name, []).append(f)
